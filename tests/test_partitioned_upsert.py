@@ -344,3 +344,42 @@ def test_upsert_kill_point_stress(spark, tmp_path, kind):
         ]
         if kind == "stale_tmp":
             assert not stale  # aged orphan swept
+
+
+def test_concurrent_upserts_share_one_warehouse_dir(spark, tmp_path):
+    """Two tables upserted from two threads into one warehouse dir (as
+    pipeline.run_load does): each swap's .trash-* cleanup races the
+    other's sweep of the shared parent, and both tables stay intact."""
+    import threading
+
+    wh = tmp_path / "wh"
+    rounds = 4
+    tables = {"part": ["day"], "flat": None}
+    errors = []
+
+    def load(name, partition_by):
+        try:
+            for r in range(rounds):
+                rows = [(f"{name}{i}", r, f"d{i % 3}") for i in range(r, r + 6)]
+                upsert_path(
+                    spark, str(wh / name), _mk_updates(spark, rows),
+                    keys=["k"], partition_by=partition_by,
+                )
+        except Exception as exc:  # noqa: BLE001 — re-raised below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=load, args=t) for t in tables.items()]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+        assert not t.is_alive()
+    assert errors == []
+
+    # key i was last written in round min(i, rounds - 1)
+    expect = {i: min(i, rounds - 1) for i in range(rounds + 5)}
+    for name in tables:
+        rows = spark.read.parquet(str(wh / name)).collect()
+        got = {r.k: (r.v, r.day) for r in rows}
+        assert got == {f"{name}{i}": (v, f"d{i % 3}") for i, v in expect.items()}
+    assert sorted(os.listdir(wh)) == sorted(tables)  # no swap debris left

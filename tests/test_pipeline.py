@@ -5,10 +5,16 @@ from __future__ import annotations
 
 import json
 import os
+import threading
+import time
+
+import pytest
 
 from weatherapi_data_engineering_project_spark import fixtures as FX
+from weatherapi_data_engineering_project_spark import schemas as S
 from weatherapi_data_engineering_project_spark import pipeline as P
 from weatherapi_data_engineering_project_spark.plans import weather_transform as WT
+from weatherapi_data_engineering_project_spark.sources import rest
 
 
 def _write_raw_zone(docs: list[dict], raw_dir: str) -> None:
@@ -191,9 +197,6 @@ def test_run_load_faithful_archive(spark, tmp_path):
     archive = str(tmp_path / "hist")
     _write_raw_zone(FX.raw_docs(), raw)
 
-    from weatherapi_data_engineering_project_spark import schemas as S
-    from weatherapi_data_engineering_project_spark.sources import rest
-
     docs = rest.read_raw_docs(spark, raw, S.WEATHER_DOC_SCHEMA)
     P.transform_to_curated(docs, curated, spark, run_tag="day1")
     audits = P.run_load(spark, curated, wh, ckpt, archive_dir=archive)
@@ -283,3 +286,154 @@ def test_derived_column_error_hits_m5_wrapper(spark, tmp_path):
     assert entries == []  # no successful audit rows
     assert any(s.startswith("Error") for _b, s in load.status_log)
     assert not os.path.exists(os.path.join(wh, "location"))
+
+
+def _curate(spark, tmp_path) -> tuple[str, dict[str, int]]:
+    """Fixture docs → raw zone → curated zone (run tag ``day1``);
+    returns the curated dir and the per-table counts."""
+    raw = str(tmp_path / "raw")
+    curated = str(tmp_path / "curated")
+    _write_raw_zone(FX.raw_docs(), raw)
+    docs = rest.read_raw_docs(spark, raw, S.WEATHER_DOC_SCHEMA)
+    return curated, P.transform_to_curated(docs, curated, spark, run_tag="day1")
+
+
+def test_transform_counts_match_written_files(spark, tmp_path):
+    """The per-table counts observed during the write equal a re-read of
+    the files the write left behind."""
+    curated, counts = _curate(spark, tmp_path)
+
+    assert list(counts) == list(P.TABLES)
+    for name, (_fn, schema, *_rest) in P.TABLES.items():
+        path = os.path.join(curated, name, "day1")
+        reread = spark.read.option("header", True).schema(schema).csv(path)
+        assert counts[name] == reread.count() > 0, name
+
+
+def test_transforms_run_concurrently(spark, tmp_path, monkeypatch):
+    """Every table's transform is built at once: each builder waits on a
+    barrier that only opens when all of them have started, so a
+    one-after-another transform breaks the barrier instead of hanging."""
+    barrier = threading.Barrier(len(P.TABLES), timeout=60)
+
+    def waiting(fn):
+        def build(docs, spark):
+            barrier.wait()
+            return fn(docs, spark)
+
+        return build
+
+    tables = {
+        name: (waiting(fn), *rest_) for name, (fn, *rest_) in P.TABLES.items()
+    }
+    monkeypatch.setattr(P, "TABLES", tables)
+
+    _curated, counts = _curate(spark, tmp_path)
+    assert list(counts) == list(P.TABLES)
+    assert all(n > 0 for n in counts.values())
+
+
+def test_drains_run_concurrently(spark, tmp_path, monkeypatch):
+    """All five drains are in flight at the same time: each stub drain
+    waits on a five-party barrier, which breaks (and fails the test)
+    after its timeout if the drains run one after another."""
+    barrier = threading.Barrier(len(P.TABLES), timeout=60)
+    seen = []
+
+    def drain(spark, load, **kwargs):
+        barrier.wait()
+        seen.append(load.name)
+        return [(0, 1, 1)]
+
+    monkeypatch.setattr(P, "run_available_now", drain)
+    audits = P.run_load(
+        spark, str(tmp_path / "c"), str(tmp_path / "w"), str(tmp_path / "k")
+    )
+    assert sorted(seen) == sorted(P.TABLES)
+    assert audits == {name: [(0, 1, 1)] for name in P.TABLES}
+
+
+def test_run_load_audits_in_table_order(spark, tmp_path, monkeypatch):
+    """Drains finish in reverse table order (each waits for the next
+    table's drain to finish), yet the audits come back keyed in TABLES
+    order."""
+    names = list(P.TABLES)
+    done = {name: threading.Event() for name in names}
+    finished = []
+
+    def drain(spark, load, **kwargs):
+        i = names.index(load.name)
+        if i + 1 < len(names):
+            assert done[names[i + 1]].wait(timeout=20)
+        finished.append(load.name)
+        done[load.name].set()
+        return [(i, 1, 1)]
+
+    monkeypatch.setattr(P, "run_available_now", drain)
+    audits = P.run_load(
+        spark, str(tmp_path / "c"), str(tmp_path / "w"), str(tmp_path / "k")
+    )
+    assert finished == names[::-1]
+    assert list(audits) == names
+    assert [e[0][0] for e in audits.values()] == list(range(len(names)))
+
+
+def test_drain_exception_reaches_caller_after_other_tables(
+    spark, tmp_path, monkeypatch
+):
+    """A drain that raises does not cut the others short: every other
+    table finishes, then the first exception in table order is raised
+    (even though a later table raised it sooner)."""
+    names = list(P.TABLES)
+    first, second = names[1], names[3]
+    finished = []
+
+    def drain(spark, load, **kwargs):
+        if load.name == first:
+            time.sleep(0.3)
+            raise RuntimeError(f"{first} drain failed")
+        if load.name == second:
+            raise ValueError(f"{second} drain failed")
+        time.sleep(0.6)
+        finished.append(load.name)
+        return []
+
+    monkeypatch.setattr(P, "run_available_now", drain)
+    with pytest.raises(RuntimeError, match=first):
+        P.run_load(
+            spark, str(tmp_path / "c"), str(tmp_path / "w"), str(tmp_path / "k")
+        )
+    assert sorted(finished) == sorted(set(names) - {first, second})
+
+
+def test_poison_batch_in_one_table_spares_the_others(
+    spark, tmp_path, monkeypatch
+):
+    """A corrupt CSV in one table's FAILFAST stage fails only that
+    table's batch (an Error status, nothing landed); the four other
+    tables load concurrently with matching audits."""
+    curated, _counts = _curate(spark, tmp_path)
+    wh = str(tmp_path / "wh")
+    poisoned = "location"
+    with open(os.path.join(curated, poisoned, "day1", "poison.csv"), "w") as f:
+        f.write("location_id,name,region,country,latitude,longitude\n")
+        f.write("MUM,Mumbai,MH,India,NOT_A_NUMBER,72.9\n")
+
+    drain = P.run_available_now
+
+    def failfast(spark, load, **kwargs):
+        return drain(spark, load, csv_mode="FAILFAST", **kwargs)
+
+    monkeypatch.setattr(P, "run_available_now", failfast)
+    loads = P.make_loads()
+    audits = P.run_load(spark, curated, wh, str(tmp_path / "ckpt"), loads=loads)
+
+    assert list(audits) == list(P.TABLES)
+    assert audits[poisoned] == []
+    assert [s[:6] for _b, s in loads[poisoned].status_log] == ["Error:"]
+    assert not os.path.exists(os.path.join(wh, poisoned))
+    for name in set(P.TABLES) - {poisoned}:
+        assert audits[name], name
+        assert all(n0 == n1 for _b, n0, n1 in audits[name]), name
+        assert all(s.startswith("Success") for _b, s in loads[name].status_log)
+        assert spark.read.parquet(os.path.join(wh, name)).count() > 0, name

@@ -255,6 +255,47 @@ def test_gated_stage_cleanup(spark, tmp_path):
     assert os.path.exists(f"{archive}/day2/w2.csv")
 
 
+def test_timed_out_drain_keeps_its_stage(spark, tmp_path, monkeypatch):
+    """A drain that outlives its timeout is stopped and logs an Error
+    status, so the archive gate keeps stage files the stream may never
+    have read — even when the batches that did finish all matched."""
+    from weatherapi_data_engineering_project_spark.streaming import load as L
+
+    stage = str(tmp_path / "stage")
+    archive = str(tmp_path / "archive")
+    load = TableLoad("dim_location", DIM_LOCATION_SCHEMA, keys=["location_id"])
+    _write_csv(f"{stage}/day1/w1.csv", [], COLS)
+
+    class HungQuery:
+        stopped = False
+
+        def awaitTermination(self, timeout):
+            return False
+
+        def stop(self):
+            self.stopped = True
+
+    query = HungQuery()
+
+    def start_load(spark, load, *args, **kwargs):
+        # one batch finished before the drain stalled
+        load.audit_log.append((0, 1, 1))
+        load.status_log.append((0, "Success: merged 1 staged keys, 1 landed"))
+        return query
+
+    monkeypatch.setattr(L, "start_load", start_load)
+    entries = L.run_available_now(
+        spark, load, stage, str(tmp_path / "t"), str(tmp_path / "k"),
+        timeout_s=7,
+    )
+
+    assert query.stopped
+    assert entries == [(0, 1, 1)]
+    assert load.status_log[-1] == (-1, "Error: drain timed out after 7s")
+    assert not L.gated_stage_cleanup(stage, archive, entries, load.status_log)
+    assert os.path.exists(f"{stage}/day1/w1.csv")
+
+
 def test_processing_time_resident_load(spark, tmp_path):
     """O1 resident mode: a processingTime-triggered stream picks up two
     file waves without restarting (the reference's 4-hour cron cadence,

@@ -239,6 +239,11 @@ def _recover_interrupted_swap(target_path: str) -> None:
     for d in entries:
         p = os.path.join(parent, d)
         if d.startswith(".trash-"):
+            # `parent` is the warehouse dir shared by every table, and
+            # pipeline.run_load upserts the tables concurrently, so this
+            # sweep can race another table's _discard deleting the same
+            # .trash-* dir. Safe: a .trash-* dir is debris by
+            # construction and both sides rmtree with ignore_errors.
             shutil.rmtree(p, ignore_errors=True)
         elif d.startswith(f".{base}.tmp-"):
             # age-guarded: a FRESH tmp dir may belong to a concurrent /

@@ -13,6 +13,21 @@ curated zone is CSV-with-header exactly like the reference's
 checkpointed file stream of ``streaming/load.py`` (Snowpipe
 semantics), so re-running any stage is idempotent end to end.
 
+The five tables run concurrently, as the reference's five Snowflake
+tasks do: each has its own task on the same ``CRON 0 */4 * * *``
+schedule and they fire together and independently
+(``location.sql:87-91``, ``condition.sql:110-114``,
+``current_weather.sql:113-117``, ``forecast_day_weather.sql:129-133``,
+``forecast_hour_weather.sql:135-139``). ``transform_to_curated`` and
+``run_load`` hand one job per table to a thread pool as wide as the
+table count. No lock is needed: each table has its own transform,
+curated prefix, checkpoint, stage dir and warehouse target, its own
+``TableLoad`` audit and status logs, and each drain runs on its own
+cloned session; Structured Streaming runs many independent queries in
+one SparkContext. Results come back in table order; a failing table
+does not stop the others, and its exception reaches the caller once
+every table has finished.
+
 Scale notes: each transform is a narrow plan over the raw docs (explode
 + project; the single shuffle is condition's dropDuplicates); loads
 shuffle once on their table's pk. Facts partition cleanly by
@@ -22,8 +37,10 @@ location_id/date via ``TableLoad.partition_by`` when targets grow.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from . import schemas as S
 from .plans import weather_transform as WT
@@ -85,27 +102,30 @@ TABLES: dict[str, tuple] = {
 def transform_to_curated(
     docs: DataFrame, curated_dir: str, spark: SparkSession, run_tag: str = "batch"
 ) -> dict[str, int]:
-    """EP2: raw docs → per-table curated CSV prefixes.
+    """EP2: raw docs → per-table curated CSV prefixes, one concurrent
+    write per table.
 
     Rows with NULL keys (unknown city, K4 semantics) are excluded from
     the curated zone — the reference would fail the Snowflake PK load;
     we filter them at the boundary and they remain observable upstream.
-    Returns per-table row counts written.
+    Returns per-table row counts written, in ``TABLES`` order.
     """
-    counts: dict[str, int] = {}
-    for name, (fn, schema, keys, _parts, _derived) in TABLES.items():
+
+    def write(name: str, table: tuple) -> int:
+        fn, _schema, keys, *_ = table
         out = fn(docs, spark)
         for k in keys:
             out = out.filter(out[k].isNotNull())
+        # count the rows as the write streams them: re-reading the
+        # written files, or counting `out` (which would re-run the whole
+        # transform), costs extra jobs per table
+        written = Observation()
+        out = out.observe(written, F.count(F.lit(1)).alias("rows"))
         path = os.path.join(curated_dir, name, run_tag)
         out.write.option("header", True).mode("overwrite").csv(path)
-        # count the WRITTEN files, not the transform output: counting
-        # `out` would re-run the whole transform a second time (the
-        # write doesn't cache its input), doubling EP2 compute at scale.
-        counts[name] = (
-            spark.read.option("header", True).schema(schema).csv(path).count()
-        )
-    return counts
+        return written.get["rows"]
+
+    return _per_table(write, TABLES)
 
 
 def run_load(
@@ -118,7 +138,8 @@ def run_load(
     archive_dir: str | None = None,
 ) -> dict[str, list[tuple[int, int, int]]]:
     """EP3: drain every table's curated prefix into its warehouse table
-    (one AvailableNow pass each — the cron-task equivalent).
+    (one AvailableNow pass each, all tables at once — the cron-task
+    equivalent). Returns each table's audit entries, in ``loads`` order.
 
     ``quarantine_dir`` enables the M5 error wrapper's poison-batch
     spill (a failed batch parks there and the drain continues);
@@ -128,8 +149,8 @@ def run_load(
     TRUNCATE + S7 history copy), otherwise they are retained for retry.
     """
     loads = loads or make_loads()
-    audits = {}
-    for name, load in loads.items():
+
+    def drain(name: str, load: TableLoad) -> list[tuple[int, int, int]]:
         stage_dir = os.path.join(curated_dir, name)
         s_before = len(load.status_log)
         entries = run_available_now(
@@ -140,7 +161,6 @@ def run_load(
             checkpoint_dir=os.path.join(checkpoint_dir, name),
             quarantine_dir=quarantine_dir,
         )
-        audits[name] = entries
         if archive_dir is not None:
             # gate on THIS run's statuses only — the cumulative log
             # would let one long-healed historical error block
@@ -151,7 +171,21 @@ def run_load(
                 entries,
                 load.status_log[s_before:],
             )
-    return audits
+        return entries
+
+    return _per_table(drain, loads)
+
+
+def _per_table(fn, tables: dict):
+    """``{name: fn(name, value)}`` for every ``name -> value`` of
+    ``tables``, all at once on one thread per table, in ``tables`` order.
+
+    Every table runs to the end even when another fails (the reference's
+    tasks are independent); then the first exception in table order is
+    re-raised."""
+    with ThreadPoolExecutor(max_workers=len(tables)) as pool:
+        futures = {name: pool.submit(fn, name, v) for name, v in tables.items()}
+    return {name: f.result() for name, f in futures.items()}
 
 
 def make_loads() -> dict[str, TableLoad]:

@@ -175,15 +175,20 @@ def run_available_now(
     **kwargs,
 ) -> list[tuple[int, int, int]]:
     """One cron-equivalent drain: process all pending stage files, wait
-    for completion, return the audit log entries appended this run."""
+    for completion, return the audit log entries appended this run.
+
+    A drain still running after ``timeout_s`` is stopped and logs an
+    ``Error`` status (batch id -1: it belongs to the drain, not to one
+    batch), so ``gated_stage_cleanup`` keeps the stage files it never
+    read."""
     before = len(load.audit_log)
     q = start_load(
         spark, load, stage_dir, target_path, checkpoint_dir, fmt=fmt,
         available_now=True, **kwargs,
     )
-    q.awaitTermination(timeout_s)
-    if q.isActive:
+    if not q.awaitTermination(timeout_s):
         q.stop()
+        load.status_log.append((-1, f"Error: drain timed out after {timeout_s}s"))
     return load.audit_log[before:]
 
 
