@@ -346,6 +346,25 @@ def test_upsert_kill_point_stress(spark, tmp_path, kind):
             assert not stale  # aged orphan swept
 
 
+@pytest.mark.parametrize("partition_by", [["day"], None], ids=["partitioned", "flat"])
+def test_empty_batches_into_new_target(spark, tmp_path, partition_by):
+    """An empty batch into a table that does not exist yet loads nothing
+    and leaves no unreadable table behind: a partitioned write of no rows
+    produces no data file at all."""
+    target = str(tmp_path / "t")
+
+    def load(rows):
+        batch = _mk_updates(spark, rows)
+        return upsert_path(spark, target, batch, keys=["k"], partition_by=partition_by)
+
+    assert load([]) == (0, 0)
+    assert load([]) == (0, 0)
+    assert load([("a", 1, "d1")]) == (1, 1)
+    rows = spark.read.parquet(target).collect()
+    assert [(r.k, r.v, r.day) for r in rows] == [("a", 1, "d1")]
+    assert sorted(os.listdir(tmp_path)) == ["t"]  # no staging dir left
+
+
 def test_concurrent_upserts_share_one_warehouse_dir(spark, tmp_path):
     """Two tables upserted from two threads into one warehouse dir (as
     pipeline.run_load does): each swap's .trash-* cleanup races the

@@ -310,6 +310,25 @@ def test_transform_counts_match_written_files(spark, tmp_path):
         assert counts[name] == reread.count() > 0, name
 
 
+def test_repeated_tick_compiles_no_new_code(spark, tmp_path):
+    """The generated-code cache holds a whole tick: a second identical
+    tick (same raw zone, fresh curated zone and warehouse) finds every
+    class it needs and compiles none."""
+    raw = str(tmp_path / "raw")
+    _write_raw_zone(FX.raw_docs(), raw)
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def tick(run: str):
+        d = tmp_path / run
+        return P.run_batch(spark, raw, str(d / "cur"), str(d / "wh"), str(d / "ck"))
+
+    tick("first")
+    compiled = codegen.METRIC_COMPILATION_TIME().getCount()
+    audits = tick("second")
+    assert codegen.METRIC_COMPILATION_TIME().getCount() == compiled
+    assert all(entries for entries in audits.values())
+
+
 def test_transforms_run_concurrently(spark, tmp_path, monkeypatch):
     """Every table's transform is built at once: each builder waits on a
     barrier that only opens when all of them have started, so a

@@ -52,6 +52,20 @@ def test_unknown_city_null_id(spark):
     assert by_name["New Delhi"] == "DEL"
 
 
+def test_city_code_table_is_jvm_local(spark):
+    """The K4 lookup's dimension is a local relation: its broadcast is
+    built on the driver, with no Python RDD behind it. (The fixture docs
+    themselves are a cached Python RDD, so look at the scan leaves of the
+    physical plan, where the cached docs are one InMemoryTableScan.)"""
+    dim = WT.dim_location(FX.docs_df(spark), spark)
+    leaves = dim._jdf.queryExecution().sparkPlan().collectLeaves()
+    names = [leaves.apply(i).nodeName() for i in range(leaves.size())]
+    assert "LocalTableScan" in names
+    assert not any("ExistingRDD" in n for n in names)
+    unknown = dim.filter(F.col("name") == "Atlantis").select("location_id")
+    assert [r.location_id for r in unknown.collect()] == [None]
+
+
 def test_humidity_bug_corrected(spark):
     """P7 deviation: humidity comes from current.humidity, not cloud
     (reference bug at DataTransformation.py:189)."""
@@ -96,6 +110,43 @@ def test_e2e_load_idempotent(spark, tmp_path):
     # idempotence: re-applying wave 2 is a no-op
     again = upsert(merged, wave2, keys=["forecast_day_weather_id"])
     assert sorted(map(tuple, again.collect())) == sorted(map(tuple, merged.collect()))
+
+
+AUDIT_CASES = {
+    # case: (stage keys, target keys, key columns, expected (n0, n1))
+    "all_landed": ([("a",), ("b",)], [("a",), ("b",)], ["k"], (2, 2)),
+    "stage_keys_missing": ([("a",), ("b",), ("c",)], [("a",)], ["k"], (3, 1)),
+    "null_stage_key": ([("a",), (None,)], [("a",), (None,)], ["k"], (2, 1)),
+    "duplicate_stage_keys": ([("a",), ("a",), ("b",)], [("a",), ("b",)], ["k"], (2, 2)),
+    "target_only_keys": ([("a",)], [("a",), ("b",), ("c",), ("c",)], ["k"], (1, 1)),
+    "two_column_key": (
+        [("a", 1), ("a", 2), ("b", 1), (None, 1), ("a", 2)],
+        [("a", 1), ("b", 2), (None, 1), ("a", None)],
+        ["k", "j"],
+        (4, 1),
+    ),
+    "empty_stage": ([], [("a",)], ["k"], (0, 0)),
+}
+
+
+@pytest.mark.parametrize("case", sorted(AUDIT_CASES))
+def test_audit_counts_equal_two_count_formula(spark, case):
+    """The one-action audit returns exactly the reference's two counts:
+    distinct stage keys, and distinct target keys semi-joined to them."""
+    stage_rows, target_rows, keys, expected = AUDIT_CASES[case]
+    ddl = ", ".join(f"{k} {'string' if k == 'k' else 'int'}" for k in keys)
+    stage = spark.createDataFrame(stage_rows, ddl)
+    target = spark.createDataFrame(target_rows, ddl)
+
+    n0 = stage.select(*keys).distinct().count()
+    n1 = (
+        target.join(stage.select(*keys).distinct(), on=keys, how="left_semi")
+        .select(*keys)
+        .distinct()
+        .count()
+    )
+    assert (n0, n1) == expected
+    assert audit_counts(target, stage, keys) == expected
 
 
 def test_varchar_parity_mode_round_trips(spark, tmp_path):

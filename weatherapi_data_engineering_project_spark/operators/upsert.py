@@ -33,6 +33,7 @@ import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 
@@ -86,15 +87,28 @@ def audit_counts(
     stage keys (``location.sql:38-40``), n1 = distinct target keys
     restricted to stage keys (``location.sql:62-68``). Equal counts mean
     every staged key landed.
+
+    Both counts come from ONE action: stage and target keys are unioned
+    with a side tag and grouped by key. The counts are those of
+    ``stage.select(keys).distinct().count()`` and of the target's
+    ``left_semi`` join on the stage keys, distinct: a key with a NULL
+    column is one distinct stage key but never joins, so it counts
+    toward n0 only.
     """
-    n0 = stage.select(*keys).distinct().count()
-    n1 = (
-        target.join(stage.select(*keys).distinct(), on=keys, how="left_semi")
-        .select(*keys)
-        .distinct()
-        .count()
+    sides = stage.select(*keys, F.lit(1).alias("__side")).unionByName(
+        target.select(*keys, F.lit(2).alias("__side"))
     )
-    return n0, n1
+    groups = sides.groupBy(*keys).agg(
+        F.min("__side").alias("__first"), F.max("__side").alias("__last")
+    )
+    in_stage = F.col("__first") == 1
+    landed = in_stage & (F.col("__last") == 2)
+    for k in keys:
+        landed = landed & F.col(k).isNotNull()
+    row = groups.agg(
+        F.count_if(in_stage).alias("n0"), F.count_if(landed).alias("n1")
+    ).collect()[0]
+    return row["n0"], row["n1"]
 
 
 def upsert_path(
@@ -136,12 +150,12 @@ def upsert_path(
         _recover_interrupted_partition_swaps(
             target_path, max_depth=len(partition_by) if partition_by else 6
         )
+    target = spark.read.parquet(target_path) if exists else None
     if exists and partition_by:
-        tgt_cols = spark.read.parquet(target_path).schema.names
-        missing = [c for c in partition_by if c not in tgt_cols]
+        missing = [c for c in partition_by if c not in target.columns]
         if not missing:
             return _upsert_partitions(
-                spark, target_path, updates, keys, order_by, partition_by
+                spark, target_path, target, updates, keys, order_by, partition_by
             )
         if derived is None or any(c not in derived for c in missing):
             raise ValueError(
@@ -153,7 +167,6 @@ def upsert_path(
         # fall through: one-time whole-table migration rewrite
 
     if exists:
-        target = spark.read.parquet(target_path)
         for c in partition_by or []:
             if c not in target.columns:
                 target = target.withColumn(c, F.expr(derived[c]))
@@ -169,9 +182,14 @@ def upsert_path(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(tmp)
+    if not _data_dirs(tmp):
+        # an empty batch into a new partitioned target writes no file at
+        # all: swapping in a dir with only _SUCCESS would leave a table
+        # that no later read can infer a schema from
+        shutil.rmtree(tmp, ignore_errors=True)
+        return 0, 0
 
-    result = spark.read.parquet(tmp)
-    n0, n1 = audit_counts(result, updates, keys)
+    n0, n1 = audit_counts(_read_keys(spark, tmp, merged, keys), updates, keys)
 
     old = target_path + f".old-{uuid.uuid4().hex[:8]}"
     if os.path.exists(target_path):
@@ -179,6 +197,25 @@ def upsert_path(
     os.rename(tmp, target_path)
     _discard(old)
     return n0, n1
+
+
+def _data_dirs(path: str) -> list[str]:
+    """Directories under ``path`` that hold a ``.parquet`` data file."""
+    return [
+        root
+        for root, _dirs, files in os.walk(path)
+        if any(f.endswith(".parquet") for f in files)
+    ]
+
+
+def _read_keys(
+    spark: SparkSession, path: str, written: DataFrame, keys: list[str]
+) -> DataFrame:
+    """Read back the key columns of the just-written ``path`` with their
+    declared types: the audit still reads the files, but no job infers
+    their schema."""
+    schema = StructType([written.schema[k] for k in keys])
+    return spark.read.schema(schema).parquet(path)
 
 
 def _discard(path: str) -> None:
@@ -260,6 +297,7 @@ def _recover_interrupted_swap(target_path: str) -> None:
 def _upsert_partitions(
     spark: SparkSession,
     target_path: str,
+    target: DataFrame,
     updates: DataFrame,
     keys: list[str],
     order_by: list[Column] | None,
@@ -296,8 +334,7 @@ def _upsert_partitions(
             this = clause if this is None else (this & clause)
         cond = this if cond is None else (cond | this)
 
-    target_slice = spark.read.parquet(target_path).filter(cond)
-    merged = upsert(target_slice, updates, keys, order_by)
+    merged = upsert(target.filter(cond), updates, keys, order_by)
 
     tmp = os.path.join(
         os.path.dirname(target_path) or tempfile.gettempdir(),
@@ -305,17 +342,11 @@ def _upsert_partitions(
     )
     merged.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
 
-    result = spark.read.parquet(tmp)
-    n0, n1 = audit_counts(result, updates, keys)
+    n0, n1 = audit_counts(_read_keys(spark, tmp, merged, keys), updates, keys)
 
     # swap each affected partition dir (nested dirs for multi-col keys);
     # collect leaf dirs first — renaming during os.walk corrupts the walk
-    leaf_dirs = [
-        root
-        for root, _dirs, files in os.walk(tmp)
-        if any(f.endswith(".parquet") for f in files)
-        and os.path.relpath(root, tmp) != "."
-    ]
+    leaf_dirs = [d for d in _data_dirs(tmp) if os.path.relpath(d, tmp) != "."]
     for root in leaf_dirs:
         rel = os.path.relpath(root, tmp)
         dst = os.path.join(target_path, rel)

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fixtures as FX
+
 # City → 3-letter code (DataTransformation.py:10-21). A broadcast-joined
 # dimension, not a Python dict lookup: at scale the map rides to every
 # executor once instead of per-row driver round-trips.
@@ -49,7 +51,10 @@ CITY_CODES = [
 
 
 def city_code_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(CITY_CODES, "name string, location_id string")
+    # An inline VALUES table is a JVM-local relation, so every transform
+    # builds this broadcast on the driver with no Spark job and no Python
+    # worker; a Python list through createDataFrame would be a Python RDD.
+    return spark.sql(f"SELECT * FROM {FX.city_map_values()}")
 
 
 def with_location_id(docs: DataFrame, spark: SparkSession) -> DataFrame:
