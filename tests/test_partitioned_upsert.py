@@ -176,63 +176,28 @@ def test_partitioned_table_prunes_at_read(spark, tmp_path):
     assert [r.k for r in q.collect()] == ["b"]
 
 
-def test_legacy_unpartitioned_target_migrates_then_goes_incremental(
-    spark, tmp_path
-):
-    """ADVICE r03: a warehouse written BEFORE a table became partitioned
-    has no partition column on disk. The first partitioned load must
-    migrate it (derive the column, rewrite partitioned) instead of
-    raising UNRESOLVED_COLUMN into the M5 error path forever; loads
-    after that take the incremental partition-rewrite path."""
-    import pytest
-
+def test_partitioned_load_onto_unpartitioned_target_raises(spark, tmp_path):
+    """A partitioned load onto an existing target written without the
+    partition column fails with an explicit ValueError (not an
+    UNRESOLVED_COLUMN crash inside the partition filter) and leaves the
+    target as it was."""
     target = str(tmp_path / "t")
-    legacy = spark.createDataFrame(
+    flat = spark.createDataFrame(
         [("d1#a1", 1), ("d1#a2", 2), ("d2#b1", 3)], "k string, v int"
     )
-    n0, n1 = upsert_path(spark, target, legacy, keys=["k"])  # unpartitioned
+    n0, n1 = upsert_path(spark, target, flat, keys=["k"])  # unpartitioned
     assert n0 == n1 == 3
-    assert not glob.glob(os.path.join(target, "day=*"))
+    before = sorted(glob.glob(os.path.join(target, "*.parquet")))
 
-    derive = {"day": "split(k, '#')[0]"}
     batch = spark.createDataFrame(
         [("d1#a1", 10, "d1"), ("d3#c1", 11, "d3")], "k string, v int, day string"
     )
-    # without the derivation the migration cannot run — explicit error,
-    # not an UNRESOLVED_COLUMN crash inside the partition filter
-    with pytest.raises(ValueError, match="lacks partition column"):
+    with pytest.raises(ValueError, match=r"lacks partition column\(s\) \['day'\]"):
         upsert_path(spark, target, batch, keys=["k"], partition_by=["day"])
 
-    n0, n1 = upsert_path(
-        spark, target, batch, keys=["k"], partition_by=["day"], derived=derive
-    )
-    assert n0 == n1 == 2
-    # table is now physically partitioned, with history preserved
-    assert glob.glob(os.path.join(target, "day=d2", "*.parquet"))
-    got = {r.k: (r.v, r.day) for r in spark.read.parquet(target).collect()}
-    assert got == {
-        "d1#a1": (10, "d1"),  # updated through the migration merge
-        "d1#a2": (2, "d1"),   # legacy row, derived day
-        "d2#b1": (3, "d2"),   # legacy row, derived day
-        "d3#c1": (11, "d3"),  # inserted
-    }
-
-    # subsequent load takes the incremental path: untouched partition
-    # files stay byte-identical
-    before_d2 = _files(target, "d2")
-    before_stat = [os.stat(f).st_mtime_ns for f in before_d2]
-    batch2 = spark.createDataFrame(
-        [("d1#a1", 20, "d1")], "k string, v int, day string"
-    )
-    n0, n1 = upsert_path(
-        spark, target, batch2, keys=["k"], partition_by=["day"], derived=derive
-    )
-    assert n0 == n1 == 1
-    assert _files(target, "d2") == before_d2
-    assert [os.stat(f).st_mtime_ns for f in before_d2] == before_stat
-    assert {
-        r.v for r in spark.read.parquet(target).filter(F.col("k") == "d1#a1").collect()
-    } == {20}
+    assert sorted(glob.glob(os.path.join(target, "*.parquet"))) == before
+    got = {r.k: r.v for r in spark.read.parquet(target).collect()}
+    assert got == {"d1#a1": 1, "d1#a2": 2, "d2#b1": 3}
 
 
 import pytest

@@ -9,6 +9,7 @@ rows, colliding texts), not example volume.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -442,3 +443,96 @@ def test_sweep_line_peak_equals_brute_force(pts):
         for (t1, _l) in pts
     )
     assert peak == achieved
+
+
+bucket_totals = st.dictionaries(
+    st.tuples(st.integers(0, 2), st.integers(0, 7)),  # (g, _bkt)
+    st.tuples(st.integers(-20, 50), st.integers(0, 50)),  # (x, y)
+    max_size=12,
+)
+
+
+@pytest.mark.parametrize("desc", [False, True])
+@pytest.mark.parametrize("by", [(), ("g",)])
+@given(cells=bucket_totals, two_aggs=st.booleans())
+@example(cells={}, two_aggs=True)  # empty totals frame
+@example(cells={(0, 3): (5, 7)}, two_aggs=True)  # a single-bucket group
+@example(
+    cells={(0, 1): (1, 9), (0, 4): (2, 3), (1, 2): (4, 8)}, two_aggs=False
+)
+@settings(**{**SETTINGS, "max_examples": 4})
+def test_bucket_offsets_equals_python_prefix(spark, cells, by, desc, two_aggs):
+    """bucket_offsets gives each (*by, _bkt) the coalesced-to-0
+    aggregate over the earlier buckets of its group (the later ones
+    when desc) — checked against a plain-Python prefix on random
+    totals frames, for sum and for a second max column."""
+    from weatherapi_data_engineering_project_spark.plans._buckets import (
+        bucket_offsets,
+    )
+
+    if not by:  # one totals row per bucket
+        cells = {(0, b): v for (_g, b), v in cells.items()}
+    bs = spark.createDataFrame(
+        [(g, b, x, y) for (g, b), (x, y) in cells.items()],
+        "g int, _bkt int, x long, y long",
+    )
+    if not by:
+        bs = bs.drop("g")
+    aggs = {"s": (F.sum, "x")}
+    if two_aggs:
+        aggs["m"] = (F.max, "y")
+    offs = bucket_offsets(bs, aggs, by=by, desc=desc)
+    assert offs.columns == [*by, "_bkt", *aggs]
+
+    def earlier(b, b2):
+        return b2 > b if desc else b2 < b
+
+    want = {}
+    for (g, b) in cells:
+        prior = [v for (g2, b2), v in cells.items()
+                 if g2 == g and earlier(b, b2)]
+        off = (sum(x for x, _ in prior),)
+        if two_aggs:
+            off += (max((y for _, y in prior), default=0),)
+        want[(g, b) if by else b] = off
+    got = {
+        (tuple(r[:2]) if by else r[0]): tuple(r[len(by) + 1:])
+        for r in offs.collect()
+    }
+    assert got == want
+
+
+@given(
+    vals=st.lists(
+        st.floats(-1e6, 1e6, allow_nan=False), min_size=0, max_size=60
+    )
+)
+@example(vals=[])
+@settings(**{**SETTINGS, "max_examples": 4})
+def test_quantile_bounds_and_bucket_of_match_hand_probe(spark, vals):
+    """quantile_bounds(n=16) and bucket_of equal the hand-written
+    approxQuantile probe and array-filter bucket they replace (the
+    [0.0] guard aside: an empty frame gets one bucket), and a value's
+    bucket is the count of boundaries strictly below it."""
+    from bisect import bisect_left
+
+    from weatherapi_data_engineering_project_spark.plans._buckets import (
+        bucket_of,
+        quantile_bounds,
+    )
+
+    df = spark.createDataFrame([(v,) for v in vals], "v double")
+    hand = sorted(
+        set(df.approxQuantile("v", [i / 16 for i in range(1, 16)], 0.01))
+    )
+    bnds = quantile_bounds(df, "v", n=16)
+    assert bnds == (hand or [0.0])
+    rows = df.select(
+        "v",
+        bucket_of("v", bnds).alias("got"),
+        F.size(
+            F.filter(F.lit(bnds).cast("array<double>"), lambda b: b < F.col("v"))
+        ).alias("hand"),
+    ).collect()
+    for r in rows:
+        assert r.got == r.hand == bisect_left(bnds, r.v)

@@ -20,8 +20,9 @@ Scale notes: the anti-join shuffles both sides on pk — at 100 TB this is
 the dominant cost, so ``upsert_path`` persists targets *partitioned by a
 stable bucket of the pk* and we pre-repartition updates on the same key,
 letting AQE pick shuffled-hash and coalesce post-join. When ``updates``
-is small relative to ``target`` (the steady-state micro-batch case) the
-anti-join broadcasts the update keyset instead of shuffling the target.
+is small relative to ``target`` (the steady-state micro-batch case)
+AQE's runtime statistics let it broadcast the update keyset instead of
+shuffling the target.
 """
 
 from __future__ import annotations
@@ -64,19 +65,12 @@ def upsert(
     updates: DataFrame,
     keys: list[str],
     order_by: list[Column] | None = None,
-    broadcast_updates: bool | None = None,
 ) -> DataFrame:
-    """MERGE semantics as a DataFrame→DataFrame transform (M1).
-
-    ``broadcast_updates=True`` hints the planner to broadcast the update
-    side of the anti-join — right for steady-state micro-batches where
-    the stage is tiny vs. the target; ``None`` lets AQE decide from
-    runtime stats.
-    """
+    """MERGE semantics as a DataFrame→DataFrame transform (M1); AQE
+    picks the anti-join strategy from runtime stats."""
     updates = dedup_updates(updates, keys, order_by)
     updates = updates.select(*target.columns)  # positional parity with target
-    anti_side = F.broadcast(updates) if broadcast_updates else updates
-    kept = target.join(anti_side.select(*keys).distinct(), on=keys, how="left_anti")
+    kept = target.join(updates.select(*keys).distinct(), on=keys, how="left_anti")
     return kept.unionByName(updates)
 
 
@@ -118,7 +112,6 @@ def upsert_path(
     keys: list[str],
     order_by: list[Column] | None = None,
     partition_by: list[str] | None = None,
-    derived: dict[str, str] | None = None,
 ) -> tuple[int, int]:
     """Persisted upsert with the overwrite-own-input hazard handled.
 
@@ -127,15 +120,9 @@ def upsert_path(
     atomically swap. Returns the (n0, n1) audit counts; callers gate
     stage cleanup on n0 == n1 exactly as ``location.sql:71-79`` does.
 
-    ``derived`` maps partition-column names to the SQL exprs that
-    compute them from the table's own columns (the load-time
-    derivation). It is only consulted for the LEGACY-target migration:
-    a warehouse written before a table became partitioned has no
-    partition column on disk, so the incremental path's partition
-    filter would raise UNRESOLVED_COLUMN on every future load. Instead
-    such a target takes a one-time whole-table merge that derives the
-    column and rewrites the table partitioned; subsequent loads use
-    the incremental path (ADVICE r03).
+    A partitioned load onto an existing target that lacks a partition
+    column raises ``ValueError``: the incremental path's partition
+    filter could not resolve it.
     """
     _recover_interrupted_swap(target_path)
     exists = os.path.exists(target_path)
@@ -153,23 +140,17 @@ def upsert_path(
     target = spark.read.parquet(target_path) if exists else None
     if exists and partition_by:
         missing = [c for c in partition_by if c not in target.columns]
-        if not missing:
-            return _upsert_partitions(
-                spark, target_path, target, updates, keys, order_by, partition_by
-            )
-        if derived is None or any(c not in derived for c in missing):
+        if missing:
             raise ValueError(
                 f"target {target_path} lacks partition column(s) "
-                f"{missing} and no derivation was supplied — pass "
-                "`derived` exprs for the one-time migration, or rewrite "
-                "the table manually"
+                f"{missing}; it was not written partitioned by "
+                f"{partition_by}"
             )
-        # fall through: one-time whole-table migration rewrite
+        return _upsert_partitions(
+            spark, target_path, target, updates, keys, order_by, partition_by
+        )
 
     if exists:
-        for c in partition_by or []:
-            if c not in target.columns:
-                target = target.withColumn(c, F.expr(derived[c]))
         merged = upsert(target, updates, keys, order_by)
     else:
         merged = dedup_updates(updates, keys, order_by)

@@ -32,6 +32,7 @@ from pyspark.sql.window import Window
 
 from ..functions import text as TX
 from ..schemas import load_table
+from ._buckets import bucket_of, bucket_offsets, quantile_bounds
 
 SESSION_GAP_US = 4 * 3600 * 1_000_000  # 4 h gap closes a session
 
@@ -163,17 +164,8 @@ def q182_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").alias("_pd"),
         "w",
     )
-    bnds = sorted(
-        set(base.approxQuantile("_pd", [i / 32 for i in range(1, 32)], 0.01))
-    )
     bucketed = base.withColumn(
-        "_bkt",
-        F.size(
-            F.filter(
-                F.lit(bnds).cast("array<double>"),
-                lambda b: b < F.col("_pd"),
-            )
-        ),
+        "_bkt", bucket_of("_pd", quantile_bounds(base, "_pd"))
     )
     offs = (
         bucketed.groupBy("o_orderpriority", "_bkt")
@@ -244,17 +236,8 @@ def q189_pareto_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     pg = pts.groupBy("price").agg(
         F.min("odate").alias("gmin"), F.min("_pd").alias("_pdd")
     )
-    bnds = sorted(
-        set(pts.approxQuantile("_pd", [i / 32 for i in range(1, 32)], 0.01))
-    )
     bucketed = pg.withColumn(
-        "_bkt",
-        F.size(
-            F.filter(
-                F.lit(bnds).cast("array<double>"),
-                lambda b: b < F.col("_pdd"),
-            )
-        ),
+        "_bkt", bucket_of("_pdd", quantile_bounds(pts, "_pd"))
     )
     wl = Window.partitionBy("_bkt").orderBy(F.col("price").desc())
     local = bucketed.withColumn(
@@ -1124,27 +1107,14 @@ def _global_ntile(
     if not ascending:
         key = -key
     if boundaries is None:
-        probe = df.select(key.alias("_k"))
-        bnds = sorted(
-            set(
-                probe.approxQuantile(
-                    "_k", [i / 16 for i in range(1, 16)], 0.01
-                )
-            )
-        )
+        bnds = quantile_bounds(df.select(key.alias("_k")), "_k", n=16)
     else:
         # caller pre-probed (e.g. one multi-column approxQuantile pass
         # shared across several rankings) — boundaries are of the KEY
         # domain, i.e. already negated for descending rankings
         bnds = sorted(set(boundaries))
     bucketed = df.withColumn("_k", key).withColumn(
-        "_bkt",
-        F.size(
-            F.filter(
-                F.lit(bnds).cast("array<double>"),
-                lambda b: b < F.col("_k"),
-            )
-        ),
+        "_bkt", bucket_of("_k", bnds)
     )
     offsets = (
         bucketed.groupBy("_bkt")
@@ -1412,17 +1382,8 @@ def q150_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
             (-F.col("spend").cast("double")).alias("_k"),
         )
     )
-    bnds = sorted(
-        set(rev.approxQuantile("_k", [i / 16 for i in range(1, 16)], 0.01))
-    )
     bucketed = rev.withColumn(
-        "_bkt",
-        F.size(
-            F.filter(
-                F.lit(bnds).cast("array<double>"),
-                lambda b: b < F.col("_k"),
-            )
-        ),
+        "_bkt", bucket_of("_k", quantile_bounds(rev, "_k", n=16))
     )
     offsets = (
         bucketed.groupBy("_bkt")
@@ -1745,21 +1706,11 @@ def q155_score_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = lab.groupBy("score").agg(
         F.count(F.lit(1)).alias("cnt"), F.sum("y").alias("pos")
     )
-    from ._buckets import bucket_of, quantile_bounds
 
     bnds = quantile_bounds(g, "score")
     bucketed = g.withColumn("_bkt", bucket_of("score", bnds))
     bs = bucketed.groupBy("_bkt").agg(F.sum("cnt").alias("bc"))
-    offs = (
-        bs.alias("a")
-        .join(
-            F.broadcast(bs.alias("b")),
-            F.col("b._bkt") < F.col("a._bkt"),
-            "left",
-        )
-        .groupBy(F.col("a._bkt").alias("_bkt"))
-        .agg(F.coalesce(F.sum("b.bc"), F.lit(0)).alias("boff"))
-    )
+    offs = bucket_offsets(bs, {"boff": (F.sum, "bc")})
     wl = Window.partitionBy("_bkt").orderBy("score")
     r = bucketed.join(F.broadcast(offs), "_bkt").withColumn(
         "off",
@@ -1858,8 +1809,6 @@ def q196_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangular join — no unpartitioned window at any corpus size. Each
     positive's P(k) = cp/k is one rounded-decimal term (q124
     convention), so the final sum is exact and order-independent."""
-    from ._buckets import bucket_of, quantile_bounds
-
     d = load_table(spark, sf_dir, "documents")
     base = d.select(
         "doc_id",
@@ -1873,18 +1822,8 @@ def q196_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("bn"), F.sum("y").alias("bp")
     )
     # DESC ranking: a bucket's offset is the mass of HIGHER buckets
-    offs = (
-        bs.alias("a")
-        .join(
-            F.broadcast(bs.alias("b")),
-            F.col("b._bkt") > F.col("a._bkt"),
-            "left",
-        )
-        .groupBy(F.col("a._bkt").alias("_bkt"))
-        .agg(
-            F.coalesce(F.sum("b.bn"), F.lit(0)).alias("roff"),
-            F.coalesce(F.sum("b.bp"), F.lit(0)).alias("poff"),
-        )
+    offs = bucket_offsets(
+        bs, {"roff": (F.sum, "bn"), "poff": (F.sum, "bp")}, desc=True
     )
     wl = Window.partitionBy("_bkt").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
@@ -1935,8 +1874,6 @@ def q197_gini_best_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort materialization). The impurity double chain runs from
     exact integer prefix sums in one shared SQL string, rounded to 9
     (identical bits both engines), so the ordering itself is exact."""
-    from ._buckets import bucket_of, quantile_bounds
-
     d = load_table(spark, sf_dir, "documents")
     g = (
         d.select(
@@ -1952,19 +1889,7 @@ def q197_gini_best_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     bs = bucketed.groupBy("_bkt").agg(
         F.sum("cnt").alias("bn"), F.sum("pos").alias("bp")
     )
-    offs = (
-        bs.alias("a")
-        .join(
-            F.broadcast(bs.alias("b")),
-            F.col("b._bkt") < F.col("a._bkt"),
-            "left",
-        )
-        .groupBy(F.col("a._bkt").alias("_bkt"))
-        .agg(
-            F.coalesce(F.sum("b.bn"), F.lit(0)).alias("noff"),
-            F.coalesce(F.sum("b.bp"), F.lit(0)).alias("poff"),
-        )
-    )
+    offs = bucket_offsets(bs, {"noff": (F.sum, "bn"), "poff": (F.sum, "bp")})
     tot = bs.agg(
         F.sum("bn").alias("n_total"), F.sum("bp").alias("p_total")
     )
@@ -2135,8 +2060,6 @@ def q205_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangular join (the q150 rewrite with a composite key — no
     per-source single-partition window even when one feed dominates
     the corpus); the cut rows are a source-count-sized broadcast."""
-    from ._buckets import bucket_of, quantile_bounds
-
     from ..caching import persist_tracked
 
     d = persist_tracked(
@@ -2148,17 +2071,7 @@ def q205_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bnds = quantile_bounds(b, "_kd")
     bk = b.withColumn("_bkt", bucket_of("_kd", bnds))
     bs = bk.groupBy("source", "_bkt").agg(F.count(F.lit(1)).alias("bn"))
-    offs = (
-        bs.alias("a")
-        .join(
-            F.broadcast(bs.alias("b")),
-            (F.col("b.source") == F.col("a.source"))
-            & (F.col("b._bkt") < F.col("a._bkt")),
-            "left",
-        )
-        .groupBy(F.col("a.source").alias("source"), F.col("a._bkt").alias("_bkt"))
-        .agg(F.coalesce(F.sum("b.bn"), F.lit(0)).alias("boff"))
-    )
+    offs = bucket_offsets(bs, {"boff": (F.sum, "bn")}, by=("source",))
     tot = bs.groupBy("source").agg(F.sum("bn").alias("ns"))
     wl = Window.partitionBy("source", "_bkt").orderBy("n_chars", "doc_id")
     ranked = (
@@ -2738,7 +2651,6 @@ def q263_wilcoxon_signed_rank(
     broadcast offset stitch) — no unpartitioned window over an
     unbounded domain. Doubled midranks keep W⁺ integral; Σ(t³−t) in
     DECIMAL(38,0); the tie-corrected z is one shared formula."""
-    from ._buckets import bucket_of, quantile_bounds
     from ..caching import persist_tracked
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -2770,16 +2682,7 @@ def q263_wilcoxon_signed_rank(
     bnds = quantile_bounds(vals, "_kd")
     bk = vals.withColumn("_bkt", bucket_of("_kd", bnds))
     bs = bk.groupBy("_bkt").agg(F.sum("cnt").alias("bn"))
-    offs = (
-        bs.alias("a")
-        .join(
-            F.broadcast(bs.alias("b")),
-            F.col("b._bkt") < F.col("a._bkt"),
-            "left",
-        )
-        .groupBy(F.col("a._bkt").alias("_bkt"))
-        .agg(F.coalesce(F.sum("b.bn"), F.lit(0)).alias("loff"))
-    )
+    offs = bucket_offsets(bs, {"loff": (F.sum, "bn")})
     wb = (
         Window.partitionBy("_bkt")
         .orderBy("ad")

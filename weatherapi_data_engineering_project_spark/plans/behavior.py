@@ -33,6 +33,7 @@ from pyspark.sql.window import Window
 
 from ..functions import text as TX
 from ..schemas import load_table
+from ._buckets import bucket_of, bucket_offsets, quantile_bounds
 
 _TOK = "string_split_regex(lower(trim(text)), '\\s+')"
 
@@ -590,23 +591,13 @@ def q159_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = st.groupBy("dur_h").agg(
         F.count(F.lit(1)).alias("n_at"), F.sum("ev").alias("d")
     )
-    from ._buckets import bucket_of, quantile_bounds
 
     bnds = quantile_bounds(g, "dur_h")
     bucketed = g.withColumn("_bkt", bucket_of("dur_h", bnds))
     # phase 1: per-bucket n_at totals -> exclusive-prefix offsets and
     # the grand total (broadcast triangular join, no window)
     bs = bucketed.groupBy("_bkt").agg(F.sum("n_at").alias("bn"))
-    offs = (
-        bs.alias("a")
-        .join(
-            F.broadcast(bs.alias("b")),
-            F.col("b._bkt") < F.col("a._bkt"),
-            "left",
-        )
-        .groupBy(F.col("a._bkt").alias("_bkt"))
-        .agg(F.coalesce(F.sum("b.bn"), F.lit(0)).alias("boff"))
-    )
+    offs = bucket_offsets(bs, {"boff": (F.sum, "bn")})
     tot = bs.agg(F.sum("bn").alias("tw"))
     wl = Window.partitionBy("_bkt").orderBy("dur_h")
     r1 = (
@@ -630,18 +621,8 @@ def q159_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     bs2 = r1.groupBy("_bkt").agg(
         F.sum("lg").alias("blg"), F.max("zf").alias("bzf")
     )
-    offs2 = (
-        bs2.alias("a")
-        .join(
-            F.broadcast(bs2.alias("b")),
-            F.col("b._bkt") < F.col("a._bkt"),
-            "left",
-        )
-        .groupBy(F.col("a._bkt").alias("_bkt"))
-        .agg(
-            F.coalesce(F.sum("b.blg"), F.lit(0)).alias("boff_lg"),
-            F.coalesce(F.max("b.bzf"), F.lit(0)).alias("boff_zf"),
-        )
+    offs2 = bucket_offsets(
+        bs2, {"boff_lg": (F.sum, "blg"), "boff_zf": (F.max, "bzf")}
     )
     r = (
         r1.join(F.broadcast(offs2), "_bkt")

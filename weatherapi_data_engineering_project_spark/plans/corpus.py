@@ -43,6 +43,7 @@ from ..functions import text as TX
 from ..operators import graph as G
 from ..operators import similarity as SIM
 from ..schemas import load_table
+from ._buckets import bucket_of, bucket_offsets, quantile_bounds
 from .llm import _IVF_LOG2_NLIST_SQL, _KM_CTES, _SCORE
 
 _TOK = "string_split_regex(lower(trim(text)), '\\s+')"
@@ -960,15 +961,7 @@ def q95_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_extendedprice").cast("decimal(18,2)").alias("price"),
         F.col("l_extendedprice").cast("double").alias("pd"),
     )
-    bnds = sorted(
-        set(li.approxQuantile("pd", [i / 32 for i in range(1, 32)], 0.01))
-    )
-    bucket = F.size(
-        F.filter(
-            F.lit(bnds).cast("array<double>"), lambda b: b < F.col("pd")
-        )
-    )
-    bucketed = li.withColumn("bkt", bucket)
+    bucketed = li.withColumn("bkt", bucket_of("pd", quantile_bounds(li, "pd")))
     counts = {
         int(r["bkt"]): int(r["n"])
         for r in bucketed.groupBy("bkt")
@@ -1246,8 +1239,6 @@ def _global_rank_desc(df: DataFrame, key: str) -> DataFrame:
     earlier ranks). No unpartitioned window at any corpus size."""
     from pyspark.sql.window import Window
 
-    from ._buckets import bucket_of, quantile_bounds
-
     from ..caching import persist_tracked
 
     # three consumers read this frame (the boundary probe, the bucket
@@ -1257,16 +1248,7 @@ def _global_rank_desc(df: DataFrame, key: str) -> DataFrame:
     bnds = quantile_bounds(b, "_kd")
     bk = b.withColumn("_bkt", bucket_of("_kd", bnds))
     bs = bk.groupBy("_bkt").agg(F.count(F.lit(1)).alias("bn"))
-    offs = (
-        bs.alias("a")
-        .join(
-            F.broadcast(bs.alias("b")),
-            F.col("b._bkt") > F.col("a._bkt"),
-            "left",
-        )
-        .groupBy(F.col("a._bkt").alias("_bkt"))
-        .agg(F.coalesce(F.sum("b.bn"), F.lit(0)).alias("roff"))
-    )
+    offs = bucket_offsets(bs, {"roff": (F.sum, "bn")}, desc=True)
     wl = Window.partitionBy("_bkt").orderBy(
         F.col(key).desc(), F.col("doc_id").asc()
     )

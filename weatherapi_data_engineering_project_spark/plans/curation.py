@@ -34,6 +34,7 @@ from pyspark.sql.window import Window
 from ..caching import checkpoint_tracked
 from ..functions import text as TX
 from ..schemas import load_table
+from ._buckets import bucket_of, bucket_offsets, quantile_bounds
 from .analytics import _CHI_CONTRIB
 
 _TOK = "string_split_regex(lower(trim(text)), '\\s+')"
@@ -1489,7 +1490,6 @@ def q212_quantile_normalization(
     from pyspark.sql.window import Window
 
     from ..caching import persist_tracked
-    from ._buckets import bucket_of, quantile_bounds
 
     base = load_table(spark, sf_dir, "documents").select(
         "source", "doc_id", "n_chars"
@@ -1500,19 +1500,7 @@ def q212_quantile_normalization(
 
     # per-source ranks (composite-key two-phase)
     bs_s = bk.groupBy("source", "_bkt").agg(F.count(F.lit(1)).alias("bn"))
-    offs_s = (
-        bs_s.alias("a")
-        .join(
-            F.broadcast(bs_s.alias("b")),
-            (F.col("b.source") == F.col("a.source"))
-            & (F.col("b._bkt") < F.col("a._bkt")),
-            "left",
-        )
-        .groupBy(
-            F.col("a.source").alias("source"), F.col("a._bkt").alias("_bkt")
-        )
-        .agg(F.coalesce(F.sum("b.bn"), F.lit(0)).alias("soff"))
-    )
+    offs_s = bucket_offsets(bs_s, {"soff": (F.sum, "bn")}, by=("source",))
     ns = bs_s.groupBy("source").agg(F.sum("bn").alias("n_s"))
     wl_s = Window.partitionBy("source", "_bkt").orderBy("n_chars", "doc_id")
     ranked = (
@@ -1523,16 +1511,7 @@ def q212_quantile_normalization(
 
     # global ranked values (bucket-key two-phase over the same frame)
     bs_g = bk.groupBy("_bkt").agg(F.count(F.lit(1)).alias("bn"))
-    offs_g = (
-        bs_g.alias("a")
-        .join(
-            F.broadcast(bs_g.alias("b")),
-            F.col("b._bkt") < F.col("a._bkt"),
-            "left",
-        )
-        .groupBy(F.col("a._bkt").alias("_bkt"))
-        .agg(F.coalesce(F.sum("b.bn"), F.lit(0)).alias("goff"))
-    )
+    offs_g = bucket_offsets(bs_g, {"goff": (F.sum, "bn")})
     wl_g = Window.partitionBy("_bkt").orderBy("n_chars", "doc_id")
     gvals = (
         bk.join(F.broadcast(offs_g), "_bkt")
@@ -1573,8 +1552,6 @@ def q215_nucleus_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     composite-key two-phase rewrite ((source, bucket)-partitioned
     windows + broadcast triangular offsets over count-derived buckets,
     DESC like q196); the nucleus pick is one min_by aggregate."""
-    from ._buckets import bucket_of, quantile_bounds
-
     d = load_table(spark, sf_dir, "documents")
     terms = (
         d.select("source", F.explode_outer(TX.tokens("text")).alias("term"))
@@ -1589,21 +1566,11 @@ def q215_nucleus_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("bn"), F.sum("c").alias("bc")
     )
     # DESC prefix: offsets accumulate from HIGHER count buckets
-    offs = (
-        bs.alias("a")
-        .join(
-            F.broadcast(bs.alias("b")),
-            (F.col("b.source") == F.col("a.source"))
-            & (F.col("b._bkt") > F.col("a._bkt")),
-            "left",
-        )
-        .groupBy(
-            F.col("a.source").alias("source"), F.col("a._bkt").alias("_bkt")
-        )
-        .agg(
-            F.coalesce(F.sum("b.bn"), F.lit(0)).alias("roff"),
-            F.coalesce(F.sum("b.bc"), F.lit(0)).alias("coff"),
-        )
+    offs = bucket_offsets(
+        bs,
+        {"roff": (F.sum, "bn"), "coff": (F.sum, "bc")},
+        by=("source",),
+        desc=True,
     )
     tot = bs.groupBy("source").agg(
         F.sum("bc").alias("t"), F.sum("bn").alias("v")

@@ -26,6 +26,7 @@ from pyspark.sql.window import Window
 
 from ..functions import text as TX
 from ..schemas import load_table
+from ._buckets import bucket_of, quantile_bounds
 
 _STOP_SQL = "('the','a','of','and','to','in','is','it')"
 _TOK = "string_split_regex(lower(trim(text)), '\\s+')"
@@ -79,15 +80,7 @@ def q49_decile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
         F.col("o_totalprice").cast("double").alias("pd"),
     )
-    bnds = sorted(
-        set(o.approxQuantile("pd", [i / 32 for i in range(1, 32)], 0.01))
-    )
-    bucket = F.size(
-        F.filter(
-            F.lit(bnds).cast("array<double>"), lambda b: b < F.col("pd")
-        )
-    )
-    bucketed = o.withColumn("bkt", bucket)
+    bucketed = o.withColumn("bkt", bucket_of("pd", quantile_bounds(o, "pd")))
     # per-bucket counts are a ≤33-row aggregate — collect them once and
     # derive BOTH the cumulative offsets (as a plan-literal array, no
     # broadcast join) and N (the NTILE arithmetic scalar) driver-side,
@@ -817,16 +810,9 @@ def q65_global_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", F.col("o_totalprice").cast("double").alias("price")
     )
     # ~32 boundaries, 1% relative error; dedup handles heavy ties
-    bnds = sorted(
-        set(o.approxQuantile("price", [i / 32 for i in range(1, 32)], 0.01))
+    bucketed = o.withColumn(
+        "bkt", bucket_of("price", quantile_bounds(o, "price"))
     )
-    bucket = F.size(
-        F.filter(
-            F.lit(bnds).cast("array<double>"),
-            lambda b: b < F.col("price"),
-        )
-    )
-    bucketed = o.withColumn("bkt", bucket)
     offsets = (
         bucketed.groupBy("bkt")
         .agg(F.count(F.lit(1)).alias("n"))

@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..schemas import load_table
+from ._buckets import bucket_of, bucket_offsets, quantile_bounds
 
 
 # layout scratch dirs created by THIS process, removed at interpreter
@@ -780,17 +781,8 @@ def q163_rle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_linestatus").alias("v_ls"),
         F.col("l_suppkey").cast("string").alias("v_sk"),
     )
-    bnds = sorted(
-        set(base.approxQuantile("_kd", [i / 32 for i in range(1, 32)], 0.01))
-    )
     bucketed = base.withColumn(
-        "_bkt",
-        F.size(
-            F.filter(
-                F.lit(bnds).cast("array<double>"),
-                lambda b: b < F.col("_kd"),
-            )
-        ),
+        "_bkt", bucket_of("_kd", quantile_bounds(base, "_kd"))
     )
     # one window PER COLUMN: ties in (k1, k2) order by the audited
     # value (see order contract above); all three share the _bkt hash
@@ -1189,7 +1181,6 @@ def q268_equidepth_histogram(
     Exactness: prices rank as exact cent BIGINTs (the double image
     used for bucketing is order-preserving far below 2^53); targets
     are pure integer arithmetic ceil = (k·n + 7) DIV 8."""
-    from ._buckets import bucket_of, quantile_bounds
     from ..caching import persist_tracked
 
     o = persist_tracked(
@@ -1204,16 +1195,7 @@ def q268_equidepth_histogram(
     bnds = quantile_bounds(o, "_kd")
     bk = o.withColumn("_bkt", bucket_of("_kd", bnds))
     bs = bk.groupBy("_bkt").agg(F.count(F.lit(1)).alias("bn"))
-    offs = (
-        bs.alias("a")
-        .join(
-            F.broadcast(bs.alias("b")),
-            F.col("b._bkt") < F.col("a._bkt"),
-            "left",
-        )
-        .groupBy(F.col("a._bkt").alias("_bkt"))
-        .agg(F.coalesce(F.sum("b.bn"), F.lit(0)).alias("loff"))
-    )
+    offs = bucket_offsets(bs, {"loff": (F.sum, "bn")})
     wl = Window.partitionBy("_bkt").orderBy("cents", "o_orderkey")
     ranked = bk.join(F.broadcast(offs), "_bkt").select(
         "cents", (F.col("loff") + F.row_number().over(wl)).alias("grank")

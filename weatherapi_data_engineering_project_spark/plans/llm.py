@@ -20,6 +20,7 @@ from ..functions import text as TX
 from ..operators import dedup as DD
 from ..operators import similarity as SIM
 from ..schemas import load_table
+from ._buckets import bucket_of, quantile_bounds
 
 JACCARD_THRESHOLD = 0.4  # catches exactly the planted near-dup pairs
 
@@ -1204,19 +1205,9 @@ def _pack_bins(f: DataFrame, budget: int = 4096) -> DataFrame:
     except (TypeError, ValueError):
         nb = 32
     nb = max(8, min(nb, 1024))
-    bnds = sorted(
-        set(f.approxQuantile("doc_id", [i / nb for i in range(1, nb)], 0.01))
+    bucketed = f.withColumn(
+        "bkt", bucket_of("doc_id", quantile_bounds(f, "doc_id", n=nb))
     )
-    if bnds:
-        bucket = F.size(
-            F.filter(
-                F.lit(bnds).cast("array<double>"),
-                lambda b: b < F.col("doc_id"),
-            )
-        )
-    else:  # empty input: single (empty) bucket
-        bucket = F.lit(0)
-    bucketed = f.withColumn("bkt", bucket)
     # per-cell token totals → exclusive prefix sum per source; this frame
     # is (n_sources × nb) rows, so its per-source window is trivially tiny
     offsets = (

@@ -16,11 +16,12 @@ truncate (``location.sql:36-83``). The Spark-native equivalent:
   n0/n1 counts are still surfaced per batch for observability
   (``location.sql:38-79``).
 
-Scale notes: file-source listing is incremental (maxFilesPerTrigger
-bounds batch size); the upsert's anti-join is the only shuffle, keyed
-on the table pk. At 100 TB the target is partitioned (e.g. by
-location_id bucket or date) so each micro-batch rewrites only the
-partitions it touches — ``partition_by`` is plumbed through.
+Scale notes: file-source listing is incremental (the source's file
+log); the stage is CSV by design (the reference's curated zone,
+``DataTransformation.py:55-66``); the upsert's anti-join is the only
+shuffle, keyed on the table pk. At 100 TB the target is partitioned
+(e.g. by location_id bucket or date) so each micro-batch rewrites only
+the partitions it touches — ``partition_by`` is plumbed through.
 """
 
 from __future__ import annotations
@@ -66,10 +67,8 @@ def start_load(
     stage_dir: str,
     target_path: str,
     checkpoint_dir: str,
-    fmt: str = "csv",
     available_now: bool = True,
     processing_time: str | None = None,
-    max_files_per_trigger: int | None = None,
     csv_mode: str = "PERMISSIVE",
     quarantine_dir: str | None = None,
     shuffle_partitions: int | None = 8,
@@ -99,19 +98,17 @@ def start_load(
     """
     if shuffle_partitions is not None:
         spark = cloned_session(spark, shuffle_partitions)
-    reader = spark.readStream.schema(load.schema)
-    # curated zones nest per-run/per-day subdirs under the table prefix
-    # (mirroring the reference's S3 key layout); discover them all
-    reader = reader.option("recursiveFileLookup", True)
-    if fmt == "csv":
-        reader = (
-            reader.option("header", True)
-            .option("quote", '"')
-            .option("mode", csv_mode)
-        )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.format(fmt).load(stage_dir)
+    stream = (
+        spark.readStream.schema(load.schema)
+        # curated zones nest per-run/per-day subdirs under the table
+        # prefix (mirroring the reference's S3 key layout); discover
+        # them all
+        .option("recursiveFileLookup", True)
+        .option("header", True)
+        .option("quote", '"')
+        .option("mode", csv_mode)
+        .csv(stage_dir)
+    )
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         try:
@@ -128,9 +125,6 @@ def start_load(
                 batch,
                 keys=load.keys,
                 partition_by=load.partition_by,
-                # enables the one-time legacy-target migration when the
-                # warehouse predates this table's partitioning
-                derived=load.derived,
             )
         except Exception as exc:  # noqa: BLE001 — M5: any batch failure
             load.status_log.append(
@@ -170,7 +164,6 @@ def run_available_now(
     stage_dir: str,
     target_path: str,
     checkpoint_dir: str,
-    fmt: str = "csv",
     timeout_s: int = 120,
     **kwargs,
 ) -> list[tuple[int, int, int]]:
@@ -183,7 +176,7 @@ def run_available_now(
     read."""
     before = len(load.audit_log)
     q = start_load(
-        spark, load, stage_dir, target_path, checkpoint_dir, fmt=fmt,
+        spark, load, stage_dir, target_path, checkpoint_dir,
         available_now=True, **kwargs,
     )
     if not q.awaitTermination(timeout_s):
