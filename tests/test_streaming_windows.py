@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from weatherapi_data_engineering_project_spark.schemas import load_table
@@ -381,8 +382,8 @@ def test_cloned_session_copies_runtime_confs(spark):
     """ADVICE r03: newSession() drops runtime confs; the clone helper
     must copy the semantics-bearing ones (timezone, nanosAsLong) and
     pin the state-shuffle width WITHOUT touching the caller."""
-    from weatherapi_data_engineering_project_spark.plans.streaming_queries import (
-        _cloned_session,
+    from weatherapi_data_engineering_project_spark.session import (
+        cloned_session,
     )
 
     old_tz = spark.conf.get("spark.sql.session.timeZone")
@@ -390,7 +391,7 @@ def test_cloned_session_copies_runtime_confs(spark):
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try:
-        s2 = _cloned_session(spark, shuffle_partitions=5)
+        s2 = cloned_session(spark, shuffle_partitions=5)
         assert s2.conf.get("spark.sql.session.timeZone") == "America/New_York"
         assert s2.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
         assert s2.conf.get("spark.sql.shuffle.partitions") == "5"
@@ -635,3 +636,78 @@ def test_q218_drain_one_wave_plus_nodata_flush(spark):
     # under the wave's advanced watermark
     assert idx[0] < idx[1], idx
     assert idx[2] == idx[1], idx
+
+
+def test_timed_out_drain_stops_and_raises():
+    """AvailableNow promises to process everything available, then
+    stop: a drain still running after DRAIN_TIMEOUT_S is stopped and
+    raises, instead of returning whatever was spilled so far."""
+    from weatherapi_data_engineering_project_spark.plans import (
+        streaming_queries as SQ,
+    )
+
+    class HungQuery:
+        stopped = False
+        waited = None
+
+        def awaitTermination(self, timeout):
+            self.waited = timeout
+            return False
+
+        def stop(self):
+            self.stopped = True
+
+    query = HungQuery()
+
+    class Stream:
+        """A streaming frame and its writer in one stub."""
+
+        writeStream = property(lambda self: self)
+
+        def foreachBatch(self, sink):
+            return self
+
+        def outputMode(self, mode):
+            return self
+
+        def option(self, key, value):
+            return self
+
+        def trigger(self, **kwargs):
+            return self
+
+        def start(self):
+            return query
+
+    with pytest.raises(TimeoutError, match=f"q999.*{SQ.DRAIN_TIMEOUT_S}s"):
+        SQ._drain(None, "q999", Stream(), None, "ckpt", "out", "append", "x int")
+    assert query.stopped
+    assert query.waited == SQ.DRAIN_TIMEOUT_S
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q218_stream_outer_interval_join",
+        "q266_stream_append_windows",
+        "q285_stream_timeout_flush",
+        "q292_stream_bounded_attribution",
+    ],
+)
+def test_sentinel_drains_on_empty_events(spark, tmp_path, name):
+    """An empty events table drains to an empty result of the usual
+    schema: no sentinel wave is written (NULL max ts + INTERVAL would
+    type its ts as an interval the stream cannot read), and the
+    read-back bound that is NULL then keeps nothing."""
+    import pyarrow.parquet as pq
+
+    from weatherapi_data_engineering_project_spark.plans import (
+        streaming_queries as SQ,
+    )
+
+    events = pq.read_table(os.path.join(SF_DIR, "events.parquet"))
+    pq.write_table(events.slice(0, 0), str(tmp_path / "events.parquet"))
+    qfn = SQ.QUERIES[name]
+    empty = qfn(spark, str(tmp_path))
+    assert empty.count() == 0
+    assert empty.schema == qfn(spark, SF_DIR).schema

@@ -12,6 +12,7 @@ import sys
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
 import bench_trend as BT  # noqa: E402
+import explain_dump as ED  # noqa: E402
 
 
 def _write(tmp_path, name, queries):
@@ -92,3 +93,27 @@ def test_load_walls_prefers_full_artifact(tmp_path):
     d = tmp_path / "driver.json"
     d.write_text(json.dumps({"tail": '"queries": {"q01_a": 3.25}}'}))
     assert BT.load_walls(str(d)) == {"q01_a": 3.25}
+
+
+def test_explain_dump_writes_a_drains_plans(spark, tmp_path, monkeypatch):
+    """A drain gets its read-back, engine and sink plans, with no
+    random part-file name left in them, so two runs compare with cmp."""
+    import re
+
+    from conftest import SF_DIR
+    from weatherapi_data_engineering_project_spark.plans import registry
+
+    monkeypatch.setenv("SPARK_GRAFT_CAPTURE_BATCH_PLANS", "1")
+    name = "q70_stream_interval_join"
+    paths = ED.dump(
+        spark, registry.all_queries(), name, SF_DIR, str(tmp_path), "t"
+    )
+    assert sorted(p.name for p in tmp_path.iterdir()) == [
+        f"{name}_t.engine.txt",
+        f"{name}_t.sink.txt",
+        f"{name}_t.txt",
+    ]
+    for path in paths:
+        text = open(path).read()
+        assert text.strip(), path
+        assert not re.search(r"part-\d+-[0-9a-f]{4}", text), path

@@ -1733,7 +1733,8 @@ def q258_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # q291 models q218's stream-stream interval join (clicks = even
 # event_id, purchases = odd, purchase in [click_ts, click_ts + 1 h],
-# 2 h watermark delay on both sides — plans/streaming_queries.py:351).
+# 2 h watermark delay on both sides —
+# plans/streaming_queries.py::_drain_sentinel_interval_join).
 # State lifetime per side follows the engine's eviction rule: a CLICK
 # is evictable once the purchase watermark passes the end of its match
 # window (click_ts + 1 h interval + 2 h delay = 3 h); a PURCHASE once

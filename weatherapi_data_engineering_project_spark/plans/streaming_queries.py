@@ -1,8 +1,9 @@
 """Streaming-only queries for the driver harness.
 
 These exercise genuinely non-SQL-expressible operators — custom
-stateful streaming via ``applyInPandasWithState`` — end to end: the
-events table is replayed through a checkpointed file stream under
+stateful streaming via ``applyInPandasWithState``, stream-stream
+interval joins, watermarked windows — end to end: the events table is
+replayed through a checkpointed file stream under
 ``Trigger.AvailableNow`` and the operator's emitted output is returned
 as the query result. q42's integer-cent state makes its multi-batch
 drain equal the batch GROUP BY twin exactly, so even the state-store
@@ -11,30 +12,62 @@ sketch — DuckDB's HLL is not bit-comparable) stays rows-only, with
 its published error bound checked via BOUNDS instead. q70's
 single-micro-batch drain is oracle-COMPLETE, so the stream-stream
 interval join is hash-verified like any batch query.
+
+One drain skeleton serves every query here but q43 (the AvailableNow
+stand-in for the reference's staged-files-then-MERGE loads). A drain
+body only says what is particular to it — its replay, its operator,
+its read-back — and leaves the rest to four helpers:
+
+- ``_replay_dirs`` names its ``src`` (the replay the file stream
+  reads), ``ckpt`` and ``out`` (the sink's parquet spill) in a fresh
+  per-query, per-dataset work dir;
+- ``_sentinel_wave`` appends the ONE sentinel wave of a
+  sentinel-flush drain (q218 family, q266, q285, q292/q293), after
+  the real files in arrival order; an empty replay gets none;
+- ``_append_sink`` appends each micro-batch to ``out``;
+  ``_swap_sink`` replaces ``out`` per batch (complete-mode tables,
+  and q84's merge); only q42 keeps its own sink (it stamps the batch
+  id);
+- ``_drain`` starts the foreachBatch stream, waits, records plans and
+  state metrics, and returns the spill read-back (an empty frame of
+  the spill's schema when no batch wrote one).
+
+Timeout policy: AvailableNow means "process everything available,
+then stop". A drain still running after ``DRAIN_TIMEOUT_S`` is
+stopped and raises ``TimeoutError`` naming the query — the rows
+spilled so far would be a truncated answer, and nothing would say so.
 """
 
 from __future__ import annotations
 
 import atexit
 import hashlib
+import json
 import os
 import shutil
 import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..schemas import load_table
+from ..session import cloned_session, scaled_state_width
 from ..streaming.windows import (
     RUNNING_TOTALS_SCHEMA,
+    bounded_interval_counts,
+    bucketed_side_counts,
+    idle_flush_totals,
     running_user_totals,
+    session_counts,
+    sliding_counts,
     stream_interval_join,
+    streaming_exact_dedup,
 )
 
-from ..session import cloned_session as _cloned_session  # noqa: E402
-# (moved to session.py in r7 so streaming/load.py shares the same
-# clone-and-pin — VERDICT r06 #5; the alias keeps existing call sites
-# and test imports stable)
+# The wait every drain gets before it is stopped and raises (see the
+# module docstring). BENCH_SCALE100_r10 records q218 at 100× past it.
+DRAIN_TIMEOUT_S = 300
 
 
 # Final-micro-batch plan capture (plan-audit support): when
@@ -74,8 +107,6 @@ def _audit_stream(tag: str, q) -> None:
     and its per-batch state-store row counts."""
     if os.environ.get("SPARK_GRAFT_CAPTURE_BATCH_PLANS"):
         LAST_BATCH_PLANS[f"{tag}/engine"] = q._jsq.explainInternal(False)
-    import json as _json
-
     try:
         LAST_STATE_METRICS[tag] = [
             (
@@ -83,15 +114,16 @@ def _audit_stream(tag: str, q) -> None:
                 p["stateOperators"][0]["numRowsTotal"],
                 p["stateOperators"][0].get("numRowsRemoved", 0),
             )
-            for p in (_json.loads(pp.json) for pp in q.recentProgress)
+            for p in (json.loads(pp.json) for pp in q.recentProgress)
             if p.get("stateOperators")
         ]
     except Exception:  # noqa: BLE001 — metrics are best-effort evidence
         LAST_STATE_METRICS[tag] = []
 
 
-def _work_dir(name: str, sf_dir: str) -> str:
-    """Deterministic per-query-per-dataset work dir, cleared on reuse so
+def _replay_dirs(name: str, sf_dir: str) -> tuple[str, str, str]:
+    """``src`` (the replay), ``ckpt`` and ``out`` (the sink's spill) in
+    a deterministic per-query-per-dataset work dir, cleared on reuse so
     repeated invocations (bench runs each query N times) hold at most
     ONE replay copy + checkpoint on disk instead of leaking a fresh
     mkdtemp each run; the final copy is removed at interpreter exit."""
@@ -100,7 +132,7 @@ def _work_dir(name: str, sf_dir: str) -> str:
     if os.path.exists(work):
         shutil.rmtree(work, ignore_errors=True)
     atexit.register(shutil.rmtree, work, ignore_errors=True)
-    return work
+    return tuple(os.path.join(work, d) for d in ("src", "ckpt", "out"))
 
 
 def _dir_bytes(path: str) -> int:
@@ -134,9 +166,7 @@ def _drain_session(spark: SparkSession, src: str, *, no_data_batches: bool = Tru
       data batches (single-batch inner/semi/dedup drains: eviction
       emits nothing for those operators, so the trailing empty batch
       was a pure per-query constant — measured 0.3–0.8 s each)."""
-    from ..session import scaled_state_width
-
-    s2 = _cloned_session(
+    s2 = cloned_session(
         spark, shuffle_partitions=scaled_state_width(_dir_bytes(src))
     )
     s2.conf.set(
@@ -146,24 +176,109 @@ def _drain_session(spark: SparkSession, src: str, *, no_data_batches: bool = Tru
     return s2
 
 
-def _order_new_files(src: str, seen: set, when: float) -> None:
-    """Deterministic file-source arrival order WITHOUT wall-clock
-    sleeps (late r12): stamp every file under ``src`` not yet in
-    ``seen`` with mtime ``when``. Spark's FileStreamSource batches
+def _sentinel_wave(src: str, max_ts, wave) -> None:
+    """Append a sentinel-flush drain's ONE sentinel wave to the replay
+    in ``src``: ``wave(ts)`` builds the wave's rows around the sentinel
+    timestamp column, +10 d past the real ``max_ts`` — far past every
+    real window, so the watermark that follows the wave can close them
+    all. An empty replay (``max_ts`` NULL) gets no wave: there is
+    nothing to flush, and NULL + INTERVAL would type the sentinel
+    ``ts`` as an interval the stream's declared schema cannot read.
+
+    Deterministic file-source arrival order WITHOUT wall-clock
+    sleeps (late r12): the real files are stamped with mtime ``base``
+    and the wave's with ``base + 1``. Spark's FileStreamSource batches
     files in modification-time order, so a sentinel wave only needs
-    mtimes strictly above the previous wave's — the 1 s sleep per
+    mtimes strictly above the real files' — the 1 s sleep per
     wave this replaces paid ~2 s real wall per drain query (7+ bench
     queries in the streaming class) and still depended on filesystem
     timestamp granularity; an explicit ``os.utime`` is exact and
     free. Ties within one wave fall to path order, which is
     irrelevant because each wave fits one micro-batch by
     construction (maxFilesPerTrigger)."""
-    for dirpath, _dirs, files in os.walk(src):
-        for f in files:
-            p = os.path.join(dirpath, f)
-            if p not in seen:
-                os.utime(p, (when, when))
-                seen.add(p)
+    if max_ts is None:
+        return
+    seen: set = set()
+
+    def stamp(when: float) -> None:
+        for dirpath, _dirs, files in os.walk(src):
+            for f in files:
+                p = os.path.join(dirpath, f)
+                if p not in seen:
+                    os.utime(p, (when, when))
+                    seen.add(p)
+
+    base = time.time()
+    stamp(base)
+    wave(F.lit(max_ts) + F.expr("INTERVAL 10 DAYS")).write.mode(
+        "append"
+    ).parquet(src)
+    stamp(base + 1)
+
+
+def _append_sink(tag: str, out: str):
+    """foreachBatch sink appending each micro-batch to the spill."""
+
+    def sink(batch: DataFrame, bid: int) -> None:
+        _audit_batch(tag, batch)
+        batch.write.mode("append").parquet(out)
+
+    return sink
+
+
+def _swap_sink(tag: str, out: str, fold=None):
+    """foreachBatch sink REPLACING the spill per micro-batch: the batch
+    — or ``fold(batch)``, a frame that folds in the current spill — is
+    written to a tmp dir and renamed over ``out``, so the spill is
+    always one whole table."""
+
+    def sink(batch: DataFrame, bid: int) -> None:
+        frame = batch if fold is None else fold(batch)
+        _audit_batch(tag, frame)
+        tmp = f"{out}.tmp-{bid}"
+        frame.write.mode("overwrite").parquet(tmp)
+        if os.path.exists(out):
+            shutil.rmtree(out)
+        os.rename(tmp, out)
+
+    return sink
+
+
+def _drain(
+    spark: SparkSession,
+    tag: str,
+    frame: DataFrame,
+    sink,
+    ckpt: str,
+    out: str,
+    mode: str,
+    empty_schema: str,
+) -> DataFrame:
+    """Run the streaming ``frame`` through ``sink`` under
+    ``Trigger.AvailableNow`` with its checkpoint in ``ckpt``, record
+    its plans and state metrics (_audit_stream) and return the spill
+    read back from ``out`` — or, when no batch wrote one, an empty
+    frame of ``empty_schema`` (the spill's schema, so the caller's
+    read-back shaping applies to either). A drain not finished after
+    DRAIN_TIMEOUT_S is stopped and raises ``TimeoutError``."""
+    q = (
+        frame.writeStream.foreachBatch(sink)
+        .outputMode(mode)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"{tag}: AvailableNow drain still running after "
+            f"{DRAIN_TIMEOUT_S}s; stopped it rather than return a "
+            "truncated result"
+        )
+    _audit_stream(tag, q)
+    if not os.path.exists(out):  # no data emitted
+        return spark.createDataFrame([], empty_schema)
+    return spark.read.parquet(out)
 
 
 def q42_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -192,14 +307,10 @@ def q42_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame reads lazily from this invocation's spill dir; it stays valid
     until the next q42 invocation clears it.
     """
-    from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     ev = load_table(spark, sf_dir, "events")
-    work = _work_dir("q42", sf_dir)
-    src = os.path.join(work, "src")
-    ckpt = os.path.join(work, "ckpt")
-    out = os.path.join(work, "out")
+    src, ckpt, out = _replay_dirs("q42", sf_dir)
     # replay only the columns the operator folds (user_id, ts, value —
     # running_user_totals projects to exactly these anyway): the setup
     # write, the per-batch scan and the Arrow hand-off all skip the
@@ -223,27 +334,22 @@ def q42_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no_data_batches is moot here (NoTimeout + no watermark — the
     # engine never schedules one), so the default stays
     s2 = _drain_session(spark, src)
-    q = (
+    updates = _drain(
+        spark,
+        "q42",
         running_user_totals(
             s2.readStream.schema("user_id bigint, ts timestamp, value double")
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
-        )
-        .writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        sink,
+        ckpt,
+        out,
+        "update",
+        f"{RUNNING_TOTALS_SCHEMA}, q42_batch_id int",
     )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-    _audit_stream("q42", q)
-    if not os.path.exists(out):  # no data emitted
-        return spark.createDataFrame([], RUNNING_TOTALS_SCHEMA)
     # last emitted update per user is the final total — one window pass,
     # computed by Spark over the spill dir
-    updates = spark.read.parquet(out)
     w = Window.partitionBy("user_id").orderBy(F.col("q42_batch_id").desc())
     keep = [c for c in updates.columns if c != "q42_batch_id"]
     return (
@@ -264,12 +370,17 @@ def q43_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-verified queries; tests bound this one's error vs exact).
     """
     ev = load_table(spark, sf_dir, "events")
-    from pyspark.sql import functions as F
-
     return ev.groupBy("event_type").agg(
         F.approx_count_distinct("user_id", rsd=0.02).alias("n_users_approx"),
         F.count(F.lit(1)).alias("n_events"),
     )
+
+
+# spill schema of the q70/q218-family interval-join drains
+_JOIN_SCHEMA = (
+    "user_id bigint, event_id bigint, ts timestamp, "
+    "p_event_id bigint, p_ts timestamp, lag_us bigint"
+)
 
 
 def q70_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -290,22 +401,12 @@ def q70_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark semantics and the file-count invariance of this drain.)
     Hash-matching DuckDB here certifies the streaming join plan itself.
     """
-    from pyspark.sql import functions as F
-
     ev = load_table(spark, sf_dir, "events")
-    work = _work_dir("q70", sf_dir)
-    src = os.path.join(work, "src")
-    ckpt = os.path.join(work, "ckpt")
-    out = os.path.join(work, "out")
+    src, ckpt, out = _replay_dirs("q70", sf_dir)
     # multi-file replay, one micro-batch ⇒ oracle-complete (see above)
     ev.select("event_id", "ts", "user_id").coalesce(8).write.mode(
         "overwrite"
     ).parquet(src)
-
-    def sink(batch: DataFrame, bid: int) -> None:
-        _audit_batch("q70", batch)
-        batch.write.mode("append").parquet(out)
-
     # cloned session: derived state-shuffle width + copied runtime
     # confs without mutating the caller's (possibly shared) session —
     # see q42. no_data_batches=False: the single-batch INNER join
@@ -321,24 +422,10 @@ def q70_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_lag="1 hour",
         watermark="2 hours",
     )
-    q = (
-        joined.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        spark, "q70", joined, _append_sink("q70", out), ckpt, out,
+        "append", _JOIN_SCHEMA,
     )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-    _audit_stream("q70", q)
-    if not os.path.exists(out):
-        return spark.createDataFrame(
-            [],
-            "user_id bigint, event_id bigint, ts timestamp, "
-            "p_event_id bigint, p_ts timestamp, lag_us bigint",
-        )
-    return spark.read.parquet(out)
 
 
 def _drain_sentinel_interval_join(
@@ -360,40 +447,24 @@ def _drain_sentinel_interval_join(
     on the streaming plan (a left-side predicate would push through
     the outer join into the scan and starve the watermark node; see
     q218's docstring)."""
-    from pyspark.sql import functions as F
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id"
     )
-    work = _work_dir(tag, sf_dir)
-    src = os.path.join(work, "src")
-    ckpt = os.path.join(work, "ckpt")
-    out = os.path.join(work, "out")
+    src, ckpt, out = _replay_dirs(tag, sf_dir)
     ev.repartition(8).write.mode("overwrite").parquet(src)
-    seen: set = set()
-    base = time.time()
-    _order_new_files(src, seen, base)
     max_ts = ev.agg(F.max("ts").alias("m")).first().m
     # one wave, two rows (ids −1/−2 — one per join-side parity, so both
     # sides' watermark columns see the jump); the flush batch itself is
     # the engine's no-data batch, not a second wave
-    for wave, (days, lo, hi, nparts) in enumerate(
-        [(10, 1, 3, 2)], start=1
-    ):
-        sent = spark.range(lo, hi, 1, nparts).select(
+    _sentinel_wave(
+        src,
+        max_ts,
+        lambda ts: spark.range(1, 3, 1, 2).select(
             (-F.col("id")).alias("event_id"),
-            (
-                F.lit(max_ts) + F.expr(f"INTERVAL {days} DAYS")
-            ).alias("ts"),
+            ts.alias("ts"),
             F.lit(-1).cast("bigint").alias("user_id"),
-        )
-        sent.write.mode("append").parquet(src)
-        _order_new_files(src, seen, base + wave)
-
-    def sink(batch: DataFrame, bid: int) -> None:
-        _audit_batch(tag, batch)
-        batch.write.mode("append").parquet(out)
-
+        ),
+    )
     s2 = _drain_session(spark, src, no_data_batches=True)
     stream = (
         s2.readStream.schema("event_id bigint, ts timestamp, user_id bigint")
@@ -407,27 +478,14 @@ def _drain_sentinel_interval_join(
         watermark="2 hours",
         how=how,
     )
-    q = (
-        joined.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    spill = _drain(
+        spark, tag, joined, _append_sink(tag, out), ckpt, out, "append",
+        _JOIN_SCHEMA,
     )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-    _audit_stream(tag, q)
-    if not os.path.exists(out):
-        return spark.createDataFrame(
-            [],
-            "user_id bigint, event_id bigint, ts timestamp, "
-            "p_event_id bigint, p_ts timestamp, lag_us bigint",
-        )
     # sentinel filter on read-back: either side's id < 0 marks a
     # sentinel participation (full_outer rows may carry NULL on one
     # side — coalesce treats the absent side as real)
-    return spark.read.parquet(out).filter(
+    return spill.filter(
         (F.coalesce(F.col("event_id"), F.lit(0)) >= 0)
         & (F.coalesce(F.col("p_event_id"), F.lit(0)) >= 0)
     )
@@ -467,7 +525,7 @@ def q218_stream_outer_interval_join(
     Watermarks advance only BETWEEN micro-batches; the flush batch
     after the wave is the engine's no-data batch (r13 — previously a
     second +20 d wave played that role). Wave mod-times are stamped
-    explicitly (_order_new_files — late r12; replaced the 1 s sleeps
+    explicitly (_sentinel_wave — late r12; replaced the 1 s sleeps
     per wave); spark.range(lo, hi, 1, n) yields n non-empty files in
     ONE job."""
     return _drain_sentinel_interval_join(spark, sf_dir, "q218", "left_outer")
@@ -525,23 +583,11 @@ def q76_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted duplicates are byte-identical rows, so the
     keep-first-arrival semantics cannot leak batch ordering into the
     result."""
-    from pyspark.sql import functions as F
-
-    from ..streaming.windows import streaming_exact_dedup
-
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    work = _work_dir("q76", sf_dir)
-    src = os.path.join(work, "src")
-    ckpt = os.path.join(work, "ckpt")
-    out = os.path.join(work, "out")
+    src, ckpt, out = _replay_dirs("q76", sf_dir)
     ev.unionAll(ev.filter(F.col("event_id") % 10 == 0)).coalesce(8).write.mode(
         "overwrite"
     ).parquet(src)
-
-    def sink(batch: DataFrame, bid: int) -> None:
-        _audit_batch("q76", batch)
-        batch.write.mode("append").parquet(out)
-
     # no_data_batches=False: the single-batch drain finds every
     # duplicate in its one data batch; dedup-state eviction emits
     # nothing, so the trailing no-data batch was a pure constant
@@ -552,22 +598,10 @@ def q76_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = streaming_exact_dedup(
         stream, ["event_id"], ts_col="ts", watermark="2 hours"
     )
-    q = (
-        deduped.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        spark, "q76", deduped, _append_sink("q76", out), ckpt, out,
+        "append", "event_id bigint, ts timestamp, user_id bigint",
     )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-    _audit_stream("q76", q)
-    if not os.path.exists(out):
-        return spark.createDataFrame(
-            [], "event_id bigint, ts timestamp, user_id bigint"
-        )
-    return spark.read.parquet(out)
 
 
 def q84_continuous_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -584,27 +618,21 @@ def q84_continuous_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     events) — the continuous-aggregate property that makes hypertable
     rollups viable at stream scale.
     """
-    from pyspark.sql import functions as F
-
     ev = load_table(spark, sf_dir, "events")
-    work = _work_dir("q84", sf_dir)
-    src = os.path.join(work, "src")
-    ckpt = os.path.join(work, "ckpt")
-    out = os.path.join(work, "out")
+    src, ckpt, out = _replay_dirs("q84", sf_dir)
     ev.select("event_id", "ts", "event_type", "value").repartition(
         4
     ).write.mode("overwrite").parquet(src)
 
-    def merge_batch(batch: DataFrame, bid: int) -> None:
+    def merge(batch: DataFrame) -> DataFrame:
         part = batch.groupBy(
             F.date_trunc("hour", "ts").alias("hour_start"), "event_type"
         ).agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,6)")).alias("sv"),
         )
-        sp = batch.sparkSession
         if os.path.exists(out):
-            cur = sp.read.parquet(out)
+            cur = batch.sparkSession.read.parquet(out)
             part = (
                 cur.unionByName(part)
                 .groupBy("hour_start", "event_type")
@@ -613,40 +641,27 @@ def q84_continuous_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.sum("sv").alias("sv"),
                 )
             )
-        _audit_batch("q84", part)
-        tmp = f"{out}.tmp-{bid}"
-        part.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(out):
-            shutil.rmtree(out)
-        os.rename(tmp, out)
+        return part
 
     # the stream itself is stateless (the merge lives in foreachBatch,
     # whose groupBy inherits the clone's derived shuffle width); no
     # watermark ⇒ no no-data batch either way
     s2 = _drain_session(spark, src, no_data_batches=False)
-    q = (
+    res = _drain(
+        spark,
+        "q84",
         s2.readStream.schema(
             "event_id bigint, ts timestamp, event_type string, value double"
         )
         .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(merge_batch)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .parquet(src),
+        _swap_sink("q84", out, fold=merge),
+        ckpt,
+        out,
+        "update",
+        "hour_start timestamp, event_type string, "
+        "n_events bigint, sv decimal(38,6)",
     )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-    _audit_stream("q84", q)
-    if not os.path.exists(out):
-        return spark.createDataFrame(
-            [],
-            "hour_start timestamp, event_type string, "
-            "n_events bigint, sum_value double",
-        )
-    res = spark.read.parquet(out)
     return res.select(
         "hour_start",
         "event_type",
@@ -678,58 +693,30 @@ def q121_stream_session_window(
     oracle harness, not the deployment shape (the operator itself —
     ``streaming/windows.session_counts`` — is the same either way).
     """
-    from pyspark.sql import functions as F
-
-    from ..streaming.windows import session_counts
-
     ev = load_table(spark, sf_dir, "events")
-    work = _work_dir("q121", sf_dir)
-    src = os.path.join(work, "src")
-    ckpt = os.path.join(work, "ckpt")
-    out = os.path.join(work, "out")
+    src, ckpt, out = _replay_dirs("q121", sf_dir)
     # multi-file replay (complete-mode drain is batch-count-invariant
     # anyway, so file layout affects only setup parallelism here)
     ev.select("event_id", "ts", "user_id", "value").coalesce(8).write.mode(
         "overwrite"
     ).parquet(src)
-
-    def sink(batch: DataFrame, bid: int) -> None:
-        _audit_batch("q121", batch)
-        tmp = f"{out}.tmp-{bid}"
-        batch.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(out):
-            shutil.rmtree(out)
-        os.rename(tmp, out)
-
     # no_data_batches=False: COMPLETE mode emits the whole session
     # table in the data batch; the trailing no-data batch would only
     # overwrite `out` with the identical table (measured ~0.5 s)
     s2 = _drain_session(spark, src, no_data_batches=False)
-    q = (
-        session_counts(
-            s2.readStream.schema(
-                "event_id bigint, ts timestamp, user_id bigint, value double"
-            ).parquet(src),
-            gap="30 minutes",
-            watermark="8 hours",
-        )
-        .writeStream.foreachBatch(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    sessions = session_counts(
+        s2.readStream.schema(
+            "event_id bigint, ts timestamp, user_id bigint, value double"
+        ).parquet(src),
+        gap="30 minutes",
+        watermark="8 hours",
     )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-    _audit_stream("q121", q)
-    if not os.path.exists(out):
-        return spark.createDataFrame(
-            [],
-            "user_id bigint, session_start timestamp, "
-            "session_end timestamp, n_events bigint, sum_value double",
-        )
-    return spark.read.parquet(out).select(
+    return _drain(
+        spark, "q121", sessions, _swap_sink("q121", out), ckpt, out,
+        "complete",
+        "user_id bigint, session_start timestamp, "
+        "session_end timestamp, n_events bigint, sum_value double",
+    ).select(
         "user_id",
         "session_start",
         "session_end",
@@ -760,56 +747,28 @@ def q136_stream_sliding_window(
     independent of stream length; the 4× row fan-out happens INSIDE
     the window operator's state update, never as a materialized
     explode of the stream."""
-    from pyspark.sql import functions as F
-
-    from ..streaming.windows import sliding_counts
-
     ev = load_table(spark, sf_dir, "events")
-    work = _work_dir("q136", sf_dir)
-    src = os.path.join(work, "src")
-    ckpt = os.path.join(work, "ckpt")
-    out = os.path.join(work, "out")
+    src, ckpt, out = _replay_dirs("q136", sf_dir)
     ev.select("event_id", "ts", "event_type", "value").coalesce(
         1
     ).write.mode("overwrite").parquet(src)
-
-    def sink(batch: DataFrame, bid: int) -> None:
-        _audit_batch("q136", batch)
-        tmp = f"{out}.tmp-{bid}"
-        batch.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(out):
-            shutil.rmtree(out)
-        os.rename(tmp, out)
-
     # no_data_batches=False: complete-mode drain, same as q121
     s2 = _drain_session(spark, src, no_data_batches=False)
-    q = (
-        sliding_counts(
-            s2.readStream.schema(
-                "event_id bigint, ts timestamp, "
-                "event_type string, value double"
-            ).parquet(src),
-            window="1 hour",
-            slide="15 minutes",
-            watermark="2 hours",
-        )
-        .writeStream.foreachBatch(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    windows = sliding_counts(
+        s2.readStream.schema(
+            "event_id bigint, ts timestamp, "
+            "event_type string, value double"
+        ).parquet(src),
+        window="1 hour",
+        slide="15 minutes",
+        watermark="2 hours",
     )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-    _audit_stream("q136", q)
-    if not os.path.exists(out):
-        return spark.createDataFrame(
-            [],
-            "window_start timestamp, window_end timestamp, "
-            "event_type string, n_events bigint, sum_value double",
-        )
-    return spark.read.parquet(out).select(
+    return _drain(
+        spark, "q136", windows, _swap_sink("q136", out), ckpt, out,
+        "complete",
+        "window_start timestamp, window_end timestamp, "
+        "event_type string, n_events bigint, sum_value double",
+    ).select(
         "window_start",
         "window_end",
         "event_type",
@@ -838,21 +797,11 @@ def q90_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile would refresh per trigger from the upsert path (M1) —
     the join plan is identical.
     """
-    from pyspark.sql import functions as F
-
     ev = load_table(spark, sf_dir, "events")
-    work = _work_dir("q90", sf_dir)
-    src = os.path.join(work, "src")
-    ckpt = os.path.join(work, "ckpt")
-    out = os.path.join(work, "out")
+    src, ckpt, out = _replay_dirs("q90", sf_dir)
     ev.select(
         "event_id", "ts", "user_id", "event_type", "value"
     ).coalesce(8).write.mode("overwrite").parquet(src)
-
-    def sink(batch: DataFrame, bid: int) -> None:
-        _audit_batch("q90", batch)
-        batch.write.mode("append").parquet(out)
-
     # no_data_batches=False: single-batch update-mode agg with no
     # watermark — every group emits in the data batch
     s2 = _drain_session(spark, src, no_data_batches=False)
@@ -880,24 +829,10 @@ def q90_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(above).alias("n_above_user_mean"),
         )
     )
-    q = (
-        agg.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    res = _drain(
+        spark, "q90", agg, _append_sink("q90", out), ckpt, out, "update",
+        "event_type string, n_events bigint, n_above_user_mean bigint",
     )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-    _audit_stream("q90", q)
-    if not os.path.exists(out):
-        return spark.createDataFrame(
-            [],
-            "event_type string, n_events bigint, "
-            "n_above_user_mean bigint, above_ratio double",
-        )
-    res = spark.read.parquet(out)
     return res.select(
         "event_type",
         "n_events",
@@ -925,21 +860,11 @@ def q256_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     in a live run are identical to the inner join's: both sides buffer
     under both watermarks; emitted-left tracking is part of the same
     state entry."""
-    from pyspark.sql import functions as F
-
     ev = load_table(spark, sf_dir, "events")
-    work = _work_dir("q256", sf_dir)
-    src = os.path.join(work, "src")
-    ckpt = os.path.join(work, "ckpt")
-    out = os.path.join(work, "out")
+    src, ckpt, out = _replay_dirs("q256", sf_dir)
     ev.select("event_id", "ts", "user_id").coalesce(8).write.mode(
         "overwrite"
     ).parquet(src)
-
-    def sink(batch: DataFrame, bid: int) -> None:
-        _audit_batch("q256", batch)
-        batch.write.mode("append").parquet(out)
-
     # no_data_batches=False: the semi join emits a left row on its
     # FIRST match, all of which land in the single data batch;
     # eviction retires unmatched state silently
@@ -954,22 +879,10 @@ def q256_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="2 hours",
         how="left_semi",
     )
-    q = (
-        joined.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        spark, "q256", joined, _append_sink("q256", out), ckpt, out,
+        "append", "user_id bigint, event_id bigint, ts timestamp",
     )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-    _audit_stream("q256", q)
-    if not os.path.exists(out):
-        return spark.createDataFrame(
-            [], "user_id bigint, event_id bigint, ts timestamp"
-        )
-    return spark.read.parquet(out)
 
 
 def q266_stream_append_windows(
@@ -997,15 +910,10 @@ def q266_stream_append_windows(
     trap). The differential therefore certifies the append-mode
     finalization semantics themselves: the streamed result equals the
     batch GROUP BY exactly."""
-    from pyspark.sql import functions as F
-
     ev = load_table(spark, sf_dir, "events").select(
         "ts", "event_type", "value"
     )
-    work = _work_dir("q266", sf_dir)
-    src = os.path.join(work, "src")
-    ckpt = os.path.join(work, "ckpt")
-    out = os.path.join(work, "out")
+    src, ckpt, out = _replay_dirs("q266", sf_dir)
     ev.repartition(8).write.mode("overwrite").parquet(src)
     stats = ev.agg(
         F.max("ts").alias("m"),
@@ -1013,26 +921,15 @@ def q266_stream_append_windows(
         .cast("bigint")
         .alias("max_day"),
     ).first()
-    seen: set = set()
-    base = time.time()
-    _order_new_files(src, seen, base)
-    for wave, (days, lo, hi, nparts) in enumerate(
-        [(10, 1, 2, 1)], start=1
-    ):
-        sent = spark.range(lo, hi, 1, nparts).select(
-            (
-                F.lit(stats.m) + F.expr(f"INTERVAL {days} DAYS")
-            ).alias("ts"),
+    _sentinel_wave(
+        src,
+        stats.m,
+        lambda ts: spark.range(1, 2, 1, 1).select(
+            ts.alias("ts"),
             F.lit("__sentinel__").alias("event_type"),
             F.lit(0.0).alias("value"),
-        )
-        sent.write.mode("append").parquet(src)
-        _order_new_files(src, seen, base + wave)
-
-    def sink(batch: DataFrame, bid: int) -> None:
-        _audit_batch("q266", batch)
-        batch.write.mode("append").parquet(out)
-
+        ),
+    )
     # no_data_batches=True: the final flush batch IS the engine's
     # no-data batch (see docstring)
     s2 = _drain_session(spark, src, no_data_batches=True)
@@ -1061,26 +958,14 @@ def q266_stream_append_windows(
             F.col("sum_cents").cast("bigint").alias("sum_cents"),
         )
     )
-    q = (
-        agg.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    spill = _drain(
+        spark, "q266", agg, _append_sink("q266", out), ckpt, out, "append",
+        "day_idx bigint, event_type string, n_events bigint, "
+        "sum_cents bigint",
     )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-    _audit_stream("q266", q)
-    if not os.path.exists(out):
-        return spark.createDataFrame(
-            [],
-            "day_idx bigint, event_type string, n_events bigint, "
-            "sum_cents bigint",
-        )
-    return spark.read.parquet(out).filter(
-        F.col("day_idx") <= F.lit(int(stats.max_day))
-    )
+    # max_day is NULL on an empty replay, and the filter then keeps
+    # nothing — there is nothing to keep
+    return spill.filter(F.col("day_idx") <= F.lit(stats.max_day))
 
 
 def q285_stream_timeout_flush(
@@ -1118,37 +1003,21 @@ def q285_stream_timeout_flush(
     result equals the batch GROUP BY user_id IFF eviction fired for
     every user — the differential hash-certifies the timeout path
     itself (integer-cent exactness, q42's argument)."""
-    from pyspark.sql import functions as F
-
-    from ..streaming.windows import idle_flush_totals
-
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "value"
     )
-    work = _work_dir("q285", sf_dir)
-    src = os.path.join(work, "src")
-    ckpt = os.path.join(work, "ckpt")
-    out = os.path.join(work, "out")
+    src, ckpt, out = _replay_dirs("q285", sf_dir)
     ev.repartition(8).write.mode("overwrite").parquet(src)
     max_ts = ev.agg(F.max("ts").alias("m")).first().m
-    seen: set = set()
-    base = time.time()
-    _order_new_files(src, seen, base)
-    for wave, (days, lo, hi, nparts) in enumerate(
-        [(10, 1, 2, 1)], start=1
-    ):
-        sent = spark.range(lo, hi, 1, nparts).select(
+    _sentinel_wave(
+        src,
+        max_ts,
+        lambda ts: spark.range(1, 2, 1, 1).select(
             F.lit(-1).cast("bigint").alias("user_id"),
-            (F.lit(max_ts) + F.expr(f"INTERVAL {days} DAYS")).alias("ts"),
+            ts.alias("ts"),
             F.lit(0.0).alias("value"),
-        )
-        sent.write.mode("append").parquet(src)
-        _order_new_files(src, seen, base + wave)
-
-    def sink(batch: DataFrame, bid: int) -> None:
-        _audit_batch("q285", batch)
-        batch.write.mode("append").parquet(out)
-
+        ),
+    )
     # no_data_batches=True: the final timeout-firing batch IS the
     # engine's no-data batch (see docstring)
     s2 = _drain_session(spark, src, no_data_batches=True)
@@ -1159,25 +1028,17 @@ def q285_stream_timeout_flush(
         .option("maxFilesPerTrigger", 8)
         .parquet(src)
     )
-    q = (
-        idle_flush_totals(stream, watermark="2 hours")
-        .writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-    _audit_stream("q285", q)
-    if not os.path.exists(out):
-        return spark.createDataFrame(
-            [],
-            "user_id bigint, n_events bigint, sum_cents bigint, "
-            "last_ts timestamp",
-        )
-    return spark.read.parquet(out).filter(F.col("user_id") >= 0)
+    return _drain(
+        spark,
+        "q285",
+        idle_flush_totals(stream, watermark="2 hours"),
+        _append_sink("q285", out),
+        ckpt,
+        out,
+        "append",
+        "user_id bigint, n_events bigint, sum_cents bigint, "
+        "last_ts timestamp",
+    ).filter(F.col("user_id") >= 0)
 
 
 def q292_stream_bounded_attribution(
@@ -1268,20 +1129,10 @@ def _bounded_attribution(
     half) on read-back. Both halves are the reusable operators in
     streaming/windows; only sentinels, spill plumbing and column
     naming live here."""
-    from pyspark.sql import functions as F
-
-    from ..streaming.windows import (
-        bounded_interval_counts,
-        bucketed_side_counts,
-    )
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id"
     )
-    work = _work_dir(name, sf_dir)
-    src = os.path.join(work, "src")
-    ckpt = os.path.join(work, "ckpt")
-    out = os.path.join(work, "out")
+    src, ckpt, out = _replay_dirs(name, sf_dir)
     ev.repartition(8).write.mode("overwrite").parquet(src)
     stats = ev.agg(
         F.max("ts").alias("m"),
@@ -1289,26 +1140,17 @@ def _bounded_attribution(
         .cast("bigint")
         .alias("max_bucket"),
     ).first()
-    seen: set = set()
-    base = time.time()
-    _order_new_files(src, seen, base)
     # ONE sentinel wave (+10 d) — the final window-finalizing batch is
     # the engine's no-data batch, exactly as in q266
-    for wave, (days, lo, hi, nparts) in enumerate(
-        [(10, 1, 2, 1)], start=1
-    ):
-        sent = spark.range(lo, hi, 1, nparts).select(
+    _sentinel_wave(
+        src,
+        stats.m,
+        lambda ts: spark.range(1, 2, 1, 1).select(
             F.lit(-2).cast("bigint").alias("event_id"),
-            (F.lit(stats.m) + F.expr(f"INTERVAL {days} DAYS")).alias("ts"),
+            ts.alias("ts"),
             F.lit(-1).cast("bigint").alias("user_id"),
-        )
-        sent.write.mode("append").parquet(src)
-        _order_new_files(src, seen, base + wave)
-
-    def sink(batch: DataFrame, bid: int) -> None:
-        _audit_batch(name, batch)
-        batch.write.mode("append").parquet(out)
-
+        ),
+    )
     s2 = _drain_session(spark, src, no_data_batches=True)
     stream = (
         s2.readStream.schema("event_id bigint, ts timestamp, user_id bigint")
@@ -1321,26 +1163,16 @@ def _bounded_attribution(
     agg = bucketed_side_counts(
         stream, bucket_seconds, side, watermark="2 hours"
     )
-    q = (
-        agg.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    spill = _drain(
+        spark, name, agg, _append_sink(name, out), ckpt, out, "append",
+        "bucket_idx bigint, user_id bigint, side string, n bigint",
     )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-    _audit_stream(name, q)
-    b_col, left_col, pairs_col = out_cols
-    if not os.path.exists(out):
-        return spark.createDataFrame(
-            [], f"{b_col} bigint, {left_col} bigint, {pairs_col} bigint"
-        )
-    counts = spark.read.parquet(out).filter(
-        (F.col("bucket_idx") <= F.lit(int(stats.max_bucket)))
+    # max_bucket is NULL on an empty replay: the filter keeps nothing
+    counts = spill.filter(
+        (F.col("bucket_idx") <= F.lit(stats.max_bucket))
         & (F.col("user_id") >= 0)
     )
+    b_col, left_col, pairs_col = out_cols
     return bounded_interval_counts(
         counts, interval_seconds, bucket_seconds
     ).select(
