@@ -5,15 +5,19 @@ The reference's extraction Lambda loops over 10 cities, GETs
 per day to the raw S3 prefix (``DataExtraction.py:32-40``, ``:48-49``,
 ``:55-69``). Spark-first re-expression:
 
-- the fetch fans out on executors via ``mapInPandas`` over the city
-  list — at 10 cities this is trivia, but the same code path scales to
-  fetching 100k shards because each partition holds a connection and
-  batches its rows (no per-row Python dispatch);
+- each city is fetched once per call on a driver thread pool,
+  ``min(len(cities), 8)`` wide (SURVEY S1), so the fetcher must be
+  thread-safe (``http_fetcher`` is); the driver holds one call's
+  payloads (~0.3 MB for 12 documents), so a far longer city list is
+  extracted per chunk;
+- the rows reach the JVM as one Arrow table, a ``LocalTableScan``: no
+  Python worker starts, and a second action does not fetch again;
 - the fetch function is injected (and the clock is a parameter, never
   ``now()`` — SURVEY.md §7 determinism rule), so tests run a canned
   fetcher and production plugs ``requests``;
-- failures yield NULL payloads and are filtered, preserving the
-  reference's skip-city-and-continue policy (``DataExtraction.py:38-40``);
+- failures yield ``None`` payloads and are dropped on the driver,
+  preserving the reference's skip-city-and-continue policy
+  (``DataExtraction.py:38-40``);
 - the raw sink is ``write.json`` partitioned by ingest date — the
   "{city}_{yyyymmdd}.json" naming becomes a (city, run_date) row in a
   date-partitioned directory, which is what makes raw-zone scans
@@ -25,9 +29,10 @@ engine operator (S8 — SURVEY.md §2.A).
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -36,9 +41,11 @@ FETCH_RESULT_SCHEMA = T.StructType(
     [
         T.StructField("city", T.StringType()),
         T.StructField("run_date", T.StringType()),
-        T.StructField("payload", T.StringType()),  # raw JSON body, NULL on failure
+        T.StructField("payload", T.StringType()),  # raw JSON body
     ]
 )
+
+_ARROW_SCHEMA = pa.schema([(name, pa.string()) for name in FETCH_RESULT_SCHEMA.names])
 
 DEFAULT_CITIES = [
     "New Delhi", "Bangalore", "Chennai", "Pune", "Mumbai",
@@ -75,29 +82,18 @@ def extract(
     cities: list[str],
     run_date: str,
     fetch: Callable[[str], str | None],
-    fan_out: bool = True,
 ) -> DataFrame:
-    """Fetch every city's document for ``run_date``; failed fetches are
-    dropped (P8 null-guard filter). Returns (city, run_date, payload).
-    """
-    cities_df = spark.createDataFrame(
-        [(c, run_date) for c in cities], "city string, run_date string"
-    )
-    if fan_out:
-
-        def fetch_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                pdf = pdf.copy()
-                pdf["payload"] = pdf["city"].map(fetch)
-                yield pdf
-
-        fetched = cities_df.repartition(max(1, min(len(cities), 8))).mapInPandas(
-            fetch_partition, schema=FETCH_RESULT_SCHEMA
-        )
-    else:  # driver-side fallback, matching the reference's loop shape
-        rows = [(c, run_date, fetch(c)) for c in cities]
-        fetched = spark.createDataFrame(rows, FETCH_RESULT_SCHEMA)
-    return fetched.filter(F.col("payload").isNotNull())
+    """Fetch every city's document for ``run_date`` once; failed fetches
+    are dropped (P8 null guard). Returns (city, run_date, payload)."""
+    with ThreadPoolExecutor(max(1, min(len(cities), 8))) as pool:
+        payloads = list(pool.map(fetch, cities))
+    rows = [
+        {"city": c, "run_date": run_date, "payload": p}
+        for c, p in zip(cities, payloads)
+        if p is not None
+    ]
+    table = pa.Table.from_pylist(rows, schema=_ARROW_SCHEMA)
+    return spark.createDataFrame(table, FETCH_RESULT_SCHEMA)
 
 
 def write_raw_zone(fetched: DataFrame, raw_dir: str) -> None:
