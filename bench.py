@@ -2,8 +2,10 @@
 ONE JSON line {"metric","value","unit","queries","sf"}.
 
 Each query executes fully (noop sink — no driver collect, no disk) and
-is timed wall-clock. The session mirrors session.py (AQE on, modest
-shuffle partitions); override cpus with SPARK_GRAFT_CPUS.
+is timed wall-clock by ``tools/measure.run_best``, which also reads the
+best run's jobs, stages, CPU and shuffle bytes from Spark's status
+store into the full artifact. The session mirrors session.py (AQE on,
+modest shuffle partitions); override cpus with SPARK_GRAFT_CPUS.
 """
 
 from __future__ import annotations
@@ -12,95 +14,28 @@ import json
 import os
 import re
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
+sys.path.insert(0, os.path.join(HERE, "tools"))
 
-from weatherapi_data_engineering_project_spark.session import get_spark  # noqa: E402
+import measure  # noqa: E402
 from weatherapi_data_engineering_project_spark.plans import registry  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
     # Console progress bars interleave with stdout and once pushed the
     # per-query JSON line past the driver's tail capture (BENCH_r02
-    # "parsed": null) — keep bench stdout pure JSON.
-    spark = get_spark(
-        app_name="bench", extra_conf={"spark.ui.showConsoleProgress": "false"}
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # "parsed": null) — measure.session keeps bench stdout pure JSON.
+    sf_dir = measure.SF_DIR
+    spark = measure.session("bench", [sf_dir])
     queries = registry.all_queries()
-
-    # Untimed generic warmup: JIT/codegen paths and the parquet footers,
-    # so the first timed query doesn't pay JVM cold-start. No per-query
-    # pre-runs — each query below is still a first execution.
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    from weatherapi_data_engineering_project_spark.schemas import (
-        TESTDATA_TABLES,
-        load_table,
-    )
-
-    for t in TESTDATA_TABLES:
-        load_table(spark, SF_DIR, t).count()
-    # one shuffle+decimal-agg shape so codegen/exchange machinery is
-    # compiled before the first timed query
-    load_table(spark, SF_DIR, "lineitem").groupBy("l_returnflag").agg(
-        {"l_quantity": "sum"}
-    ).collect()
-    # the weather queries' input table (nested fixture docs) — materialize
-    # its session cache like the parquet tables above
-    from weatherapi_data_engineering_project_spark import fixtures as FX
-
-    FX.docs_df(spark).count()
-
-    from weatherapi_data_engineering_project_spark.caching import release_all
 
     # Steady-state measurement: each query executes N_RUNS times and the
     # minimum is recorded (disclosed as "runs" in the output). The box
     # runs other jobs concurrently; a single sample conflates engine time
-    # with scheduler noise. Operator-internal caches are released between
-    # runs, so every sample is a full recomputation.
+    # with scheduler noise.
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
-
-    def _sweep_hygiene(heavy: bool) -> None:
-        """In-sweep contamination control (VERDICT r11 #1): the driver's
-        single alphabetical sweep inflated q29…q45 up to 11.9× because
-        the eight heavy streaming/tuner queries q289–q296 run
-        immediately before them, leaving lingering streaming state,
-        cached blocks, and GC/page-cache pressure. After EVERY query:
-        stop any StreamingQuery a drain left behind (cheap, usually a
-        no-op). After a HEAVY query (wall > 2 s — the streaming-drain /
-        tuner class): drop ALL cached blocks, hint a JVM GC so the next
-        timed query doesn't pay the collection, and re-warm the one
-        intentional session cache (the weather fixture) that the sweep's
-        warmup established — clearing it unconditionally would instead
-        shift every weather wall up by a fixture rebuild."""
-        try:
-            for q in spark.streams.active:
-                q.stop()
-        except Exception:
-            pass
-        if heavy:
-            spark.catalog.clearCache()
-            try:
-                spark.sparkContext._jvm.System.gc()
-            except Exception:
-                pass
-            # .cache() re-registers the cleared plan in the
-            # CacheManager (a bare .count() would recompute uncached)
-            FX.docs_df(spark).cache().count()
-
-    def _measure(fn) -> float:
-        best = None
-        for _ in range(n_runs):
-            start = time.perf_counter()
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            elapsed = time.perf_counter() - start
-            best = elapsed if best is None else min(best, elapsed)
-            release_all()
-            _sweep_hygiene(heavy=elapsed > 2.0)
-        return best
 
     # SPARK_GRAFT_BENCH_ONLY=q1,q2 sweeps just those queries (smoke /
     # focused re-measure); unknown names fail fast (the
@@ -118,43 +53,12 @@ def main() -> None:
     names = [q for q in sorted(queries) if not only or q in only]
 
     timings: dict[str, float] = {}
+    layers: dict[str, dict] = {}
     for name in names:
-        timings[name] = round(_measure(queries[name]), 3)
+        wall, layers[name] = measure.run_best(spark, queries[name], sf_dir, n_runs)
+        timings[name] = round(wall, 3)
 
-    # Flagged-block second pass (VERDICT r11 #1): any wall > 2× its
-    # prior-round committed value is re-measured at the END of the
-    # sweep (after the hygiene above has cleared the session) and the
-    # MINIMUM recorded with a rerun note — the in-sweep analogue of the
-    # SPARK_GRAFT_DIFF_ONLY focused-re-run protocol. Reference =
-    # $SPARK_GRAFT_BENCH_REF, else the newest committed
-    # bench_full_r*.json beside this file.
-    reruns: dict[str, dict[str, float]] = {}
-    ref_path = os.environ.get("SPARK_GRAFT_BENCH_REF")
-    here = os.path.dirname(os.path.abspath(__file__))
-    if not ref_path:
-        cands = sorted(
-            (
-                int(m.group(1)), os.path.join(here, f)
-            )
-            for f in os.listdir(here)
-            if (m := re.match(r"bench_full_r(\d+)\.json$", f))
-        )
-        ref_path = cands[-1][1] if cands else None
-    ref_q: dict[str, float] = {}
-    if ref_path and os.path.exists(ref_path):
-        try:
-            with open(ref_path) as f:
-                ref_q = json.load(f).get("queries", {}) or {}
-        except Exception:
-            ref_q = {}
-    for name in sorted(timings):
-        ref = ref_q.get(name)
-        if ref and ref > 0 and timings[name] > 2.0 * ref:
-            again = round(_measure(queries[name]), 3)
-            reruns[name] = {"sweep": timings[name], "rerun": again}
-            timings[name] = min(timings[name], again)
-
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     total = round(sum(timings.values()), 3)
     print(
@@ -172,19 +76,19 @@ def main() -> None:
     # Full per-query artifact (VERDICT r06 #2): the driver's BENCH_r{N}
     # tail truncates to the last ~2.4 KB, which blinds tools/
     # bench_trend.py to two-thirds of the registry. Persist the complete
-    # dict to bench_full_r{N}.json so the gate compares every query.
+    # dict to bench_full_r{N}.json so the gate compares every query,
+    # with each query's best-run execution layers under "exec".
     # N = next round = max committed BENCH_r* + 1 (the driver commits
     # BENCH_r{N} after this run); override with SPARK_GRAFT_BENCH_FULL.
     full_path = os.environ.get("SPARK_GRAFT_BENCH_FULL")
     if not full_path:
-        here = os.path.dirname(os.path.abspath(__file__))
         rounds = [
             int(m.group(1))
-            for f in os.listdir(here)
+            for f in os.listdir(HERE)
             if (m := re.match(r"BENCH_r(\d+)\.json$", f))
         ]
         n = (max(rounds) + 1) if rounds else 1
-        full_path = os.path.join(here, f"bench_full_r{n:02d}.json")
+        full_path = os.path.join(HERE, f"bench_full_r{n:02d}.json")
     full_doc = {
         "metric": "total_query_wall_seconds",
         "value": total,
@@ -192,12 +96,8 @@ def main() -> None:
         "queries": timings,
         "sf": sf_val,
         "runs": n_runs,
+        "exec": layers,
     }
-    if reruns:
-        # disclosure of the flagged-block second pass: which sweeps were
-        # re-measured and both samples (timings holds the minimum)
-        full_doc["rerun"] = reruns
-        full_doc["rerun_ref"] = os.path.basename(ref_path or "")
     with open(full_path, "w") as f:
         json.dump(full_doc, f, indent=1)
     # The per-query line above grows with the registry and can outrun a

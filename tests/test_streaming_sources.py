@@ -150,38 +150,6 @@ def test_multimodal_frame_sampling(spark):
     assert len(hashes) == 3  # per-frame distinct, deterministic
 
 
-def test_weatherapi_datasource_fixture_mode(spark, tmp_path):
-    """Custom Python DataSource (S1): per-city partitions, fixture-served
-    payloads parse with the typed doc schema and feed the transform."""
-    from weatherapi_data_engineering_project_spark.sources.weatherapi_source import (
-        WeatherApiDataSource,
-    )
-    from weatherapi_data_engineering_project_spark.plans import (
-        weather_transform as WT,
-    )
-
-    spark.dataSource.register(WeatherApiDataSource)
-    raw = (
-        spark.read.format("weatherapi")
-        .option("mode", "fixture")
-        .option("cities", "New Delhi,Mumbai,Kochi,Atlantis")
-        .load()
-    )
-    assert raw.rdd.getNumPartitions() == 4  # one per city
-    rows = raw.collect()
-    assert {r.city for r in rows} == {"New Delhi", "Mumbai", "Kochi", "Atlantis"}
-
-    docs = (
-        raw.select(
-            F.from_json("payload", WEATHER_DOC_SCHEMA).alias("doc")
-        ).select("doc.*")
-    )
-    dim = WT.dim_location(docs, spark)
-    by_name = {r.name: r.location_id for r in dim.collect()}
-    assert by_name["New Delhi"] == "DEL"
-    assert by_name["Atlantis"] is None  # K4 unknown city
-
-
 def test_poison_batch_survives(spark, tmp_path):
     """M5 error wrapper: a malformed CSV fails its own batch with an
     Error status but does not halt the load — later drains succeed."""

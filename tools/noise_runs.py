@@ -1,10 +1,9 @@
 """4-run noise-classification protocol (VERDICT r06 q49 convention, r08 #3).
 
 Runs each named query in N_ISOLATED separate best-of-2 measurements inside
-ONE warmed session (bench.py's exact measurement recipe: noop sink,
-release_all between samples), printing per-run walls so a reviewer can see
-whether the spread brackets the historical value or reproducibly sits at the
-regressed one.
+ONE warmed session (bench.py's measurement, ``measure.run_best``), printing
+per-run walls so a reviewer can see whether the spread brackets the
+historical value or reproducibly sits at the regressed one.
 
 Usage: python tools/noise_runs.py q89_pagerank q87_semantic_dedup ...
 """
@@ -14,53 +13,25 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from weatherapi_data_engineering_project_spark.session import get_spark  # noqa: E402
+import measure  # noqa: E402
 from weatherapi_data_engineering_project_spark.plans import registry  # noqa: E402
-from weatherapi_data_engineering_project_spark.caching import release_all  # noqa: E402
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 N_ISOLATED = int(os.environ.get("SPARK_GRAFT_NOISE_RUNS", "4"))
 
 
 def main(names: list[str]) -> None:
-    spark = get_spark(
-        app_name="noise-runs",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = measure.session("noise-runs", [measure.SF_DIR])
     queries = registry.all_queries()
-
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    from weatherapi_data_engineering_project_spark.schemas import (
-        TESTDATA_TABLES,
-        load_table,
-    )
-
-    for t in TESTDATA_TABLES:
-        load_table(spark, SF_DIR, t).count()
-    load_table(spark, SF_DIR, "lineitem").groupBy("l_returnflag").agg(
-        {"l_quantity": "sum"}
-    ).collect()
-
     out: dict[str, list[float]] = {}
     for name in names:
-        fn = queries[name]
-        walls = []
-        for _ in range(N_ISOLATED):
-            best = None
-            for _ in range(2):
-                start = time.perf_counter()
-                fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-                elapsed = time.perf_counter() - start
-                best = elapsed if best is None else min(best, elapsed)
-                release_all()
-            walls.append(round(best, 3))
-        out[name] = walls
-        print(json.dumps({"query": name, "best_of_2_walls": walls}), flush=True)
+        out[name] = [
+            round(measure.run_best(spark, queries[name], measure.SF_DIR, 2)[0], 3)
+            for _ in range(N_ISOLATED)
+        ]
+        print(json.dumps({"query": name, "best_of_2_walls": out[name]}), flush=True)
     print(json.dumps({"summary": out}))
     if OUT_PATH:
         _write_artifact(out)
@@ -106,7 +77,7 @@ def _write_artifact(out: dict[str, list[float]]) -> None:
             "warmed quiet-box session (bench.py recipe); verdict=noise when "
             "the isolated minimum <= min(historical) * 1.15"
         ),
-        "sf_dir": SF_DIR,
+        "sf_dir": measure.SF_DIR,
         "queries": rows,
     }
     with open(OUT_PATH, "w") as fh:

@@ -1,39 +1,39 @@
-"""Empirical scaling check (VERDICT r08 #5): 1× vs 10× walls for the
-slowest non-streaming queries.
+"""Empirical scaling check: 1× vs R× walls and shuffle bytes of the
+costliest queries, on a corpus replicated R times from the base
+directory (``measure.replicate``: facts grow, dimensions stay 1×, keys
+stay unique, replicas stay distinct).
 
-The 100×-scale claims in docstrings are design arguments; this measures
-them. A ~10× corpus is synthesized locally by union-replicating the
-sf0.1 parquet with key-offset re-stamping (PKs stay unique; fact keys
-offset consistently across orders/lineitem so FKs stay valid; dims stay
-1× — facts grow, dimensions don't). Replicated documents get a per-copy
-text suffix and replicated embeddings a per-copy coordinate nudge so
-dedup/ANN queries don't degenerate into artificial groups of 10
-identical items (which would measure an input pathology, not scaling).
+Each target query runs best-of-N at both scales in one warmed session;
+the wall and the shuffle bytes of each scale's best run come from
+``measure.run_best``, which reads Spark's status store. A
+shuffle-bound query should land near R×·log-ish growth; anything
+super-linear beyond its shuffle volume gets a plan fix or a documented
+reason.
 
-Replica distinctness matters MORE than key uniqueness for similarity
-workloads (measured, r09): a first corpus that appended a short
-per-copy suffix to each document (and nudged one embedding coordinate
-by 1e-3) made every item a 10-way TRUE near-duplicate of its base —
-q149's Jaccard>=1/2 self-join output grew ~45x (C(10,2) pairs per
-group) and its wall 47x, q93's cosine pairs likewise (18.5x). Those
-walls were OUTPUT-bound, not plan pathologies, but they measure an
-input artifact, not scaling. This builder therefore salts ALTERNATE
-WORDS with a copy tag (cross-copy token Jaccard ~1/3, below the 1/2
-threshold, while half the vocabulary still collides across copies so
-candidate buckets stay realistically mixed) and ROTATES each replica's
-embedding by k positions (norm-preserving, cosine to the base ~random),
-so the true near-dup structure is 10 disjoint copies of the base
-corpus's and output grows linearly.
+Streaming rows measure the waived drains' claims: the wall grows by the
+data term only (the sentinel and trigger constant is fixed), and peak
+state rows (from each drain's ``recentProgress``, via
+``streaming_queries.LAST_STATE_METRICS``) track the KEY space, which
+the replicas share, not the row count. One drain per scale: drain work
+dirs clear on reuse, so a second run would only pay the fixed drain
+constant again.
 
-Then each target query runs best-of-2 at BOTH scales in one warmed
-session (bench.py's recipe) and the ratio is recorded. A shuffle-bound
-query should land near 10×·log-ish growth; anything super-linear beyond
-shuffle-volume expectations gets a plan fix or a documented reason.
+Artifact rows: ``wall_1x``, ``wall_{R}x``, ``ratio``,
+``shuffle_{write,read}_bytes_{1,R}x`` and ``missing_jobs_{1,R}x`` (jobs
+the status store no longer held; nonzero means the shuffle bytes are
+an undercount), plus ``state_rows_peak_{1,R}x`` for drains.
 
-Usage: python tools/scale_bench.py [out.json]
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_SCALE_DIR (default /tmp/spark_graft_scale10x),
-     SPARK_GRAFT_SCALE_REPLICAS (default 10).
+Usage: python tools/scale_bench.py OUT.json
+Env: SPARK_GRAFT_SF_DIR (base corpus, default /root/testdata/sf0.1),
+     SPARK_GRAFT_SCALE_REPLICAS (R, default 10; the corpus lives in
+       measure.scale_dir(R)),
+     SPARK_GRAFT_SCALE_TARGETS / SPARK_GRAFT_SCALE_STREAM_TARGETS
+       (comma-separated; override the lists for a focused row, which
+       is merged into an existing OUT.json; the q292 row is
+       ``SPARK_GRAFT_SCALE_TARGETS= SPARK_GRAFT_SCALE_STREAM_TARGETS=q292_stream_bounded_attribution``),
+     SPARK_GRAFT_SCALE_BUILD_ONLY=1 (build the corpus and exit, so the
+       measurement runs in a fresh session: building and measuring in
+       one session inflates 1× walls up to 4×).
 """
 
 from __future__ import annotations
@@ -43,244 +43,117 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import functions as F  # noqa: E402
-
-from weatherapi_data_engineering_project_spark.session import get_spark  # noqa: E402
-from weatherapi_data_engineering_project_spark.schemas import (  # noqa: E402
-    TESTDATA_TABLES,
-    load_table,
-)
+import measure  # noqa: E402
 from weatherapi_data_engineering_project_spark.plans import registry  # noqa: E402
-from weatherapi_data_engineering_project_spark.caching import release_all  # noqa: E402
+from weatherapi_data_engineering_project_spark.plans import (  # noqa: E402
+    streaming_queries as SQ,
+)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-SCALE_DIR = os.environ.get("SPARK_GRAFT_SCALE_DIR", "/tmp/spark_graft_scale10x")
 REPLICAS = int(os.environ.get("SPARK_GRAFT_SCALE_REPLICAS", "10"))
 
-# Replica key offset for events/orders/lineitem. q292/q218 assign the
-# click/purchase side by event_id PARITY, so this stride MUST stay even
-# or replication would flip sides on odd copies and silently change
-# both scale claims (ADVICE r10; stream_scale_q292 imports this).
-EVENT_ID_STRIDE = 100_000_000
-assert EVENT_ID_STRIDE % 2 == 0, "event parity defines q292/q218 sides"
-
-# the 10 slowest non-streaming queries of bench_full_r08.json.
-# SPARK_GRAFT_SCALE_TARGETS / _STREAM_TARGETS (comma-separated)
-# override both lists for focused per-round rows (r11: q28's
-# corpus-derived SimHash width); SPARK_GRAFT_SCALE_BUILD_ONLY=1 builds
-# the replica corpus and exits so the measurement can run in a FRESH
-# session (building and measuring in one session inflates 1x walls up
-# to 4x — r10 curve-bench lesson).
-TARGETS = [
-    "q89_pagerank",
-    "q87_semantic_dedup",
-    "q77_training_prep",
-    "q191_heaps_law",
-    "q60_ivf_kmeans_ann",
-    "q173_quality_representatives",
-    "q47_dedup_clusters",
-    "q72_dedup_keep_list",
-    "q149_prefix_join",
-    "q93_semantic_contamination",
-]
-
-# Streaming state path (VERDICT r09 #4): the waived drains claim their
-# wall is a fixed sentinel/trigger constant and their state is
-# watermark-bounded, NOT corpus-proportional. These rows measure both
-# claims at 1x vs 10x events: wall should grow by the data term only
-# (the ~2s sleep/trigger constant unchanged) and peak
-# numRowsTotal (from each drain's recentProgress, via
-# streaming_queries.LAST_STATE_METRICS) should track the KEY space —
-# identical at both scales here, since the replicated events reuse the
-# same user_id range.
-STREAM_TARGETS = [
-    "q285_stream_timeout_flush",
-    "q266_stream_append_windows",
-    "q218_stream_outer_interval_join",
-    # the bounded-state rewrite of q218's aggregate use-case: its peak
-    # state must stay at the counter count (flat at 10x events over
-    # the same user base) while q218's grows with rows-in-window
-    "q292_stream_bounded_attribution",
-]
-
-DIMS = {"region", "nation", "customer", "supplier", "part"}
-
-_t_env = os.environ.get("SPARK_GRAFT_SCALE_TARGETS")
-if _t_env is not None:
-    TARGETS = [t for t in _t_env.split(",") if t]
-_st_env = os.environ.get("SPARK_GRAFT_SCALE_STREAM_TARGETS")
-if _st_env is not None:
-    STREAM_TARGETS = [t for t in _st_env.split(",") if t]
+# Per replica count: the batch targets, the streaming targets, and the
+# best-of-N runs at 1× and at R×. Any other R uses the 10× plan.
+PLANS = {
+    10: {
+        # the 10 slowest non-streaming queries of bench_full_r08.json
+        "targets": [
+            "q89_pagerank",
+            "q87_semantic_dedup",
+            "q77_training_prep",
+            "q191_heaps_law",
+            "q60_ivf_kmeans_ann",
+            "q173_quality_representatives",
+            "q47_dedup_clusters",
+            "q72_dedup_keep_list",
+            "q149_prefix_join",
+            "q93_semantic_contamination",
+        ],
+        "stream": [
+            "q285_stream_timeout_flush",
+            "q266_stream_append_windows",
+            "q218_stream_outer_interval_join",
+            # the bounded-state rewrite of q218's use case: its peak
+            # state must stay at the counter count while q218's grows
+            # with the rows in its window
+            "q292_stream_bounded_attribution",
+        ],
+        # a third run absorbs one multi-second transient of a long
+        # session per (query, scale) cell
+        "runs": (3, 3),
+    },
+    100: {
+        "targets": [
+            "q02_star_revenue",
+            "q23_exact_dedup",
+            "q47_dedup_clusters",
+            # the corpus-derived LSH widths: at 200k vectors and 500k
+            # docs they must keep candidate mass ~linear
+            "q93_semantic_contamination",
+            "q25_minhash_lsh",
+        ],
+        "stream": [],
+        "runs": (2, 1),
+    },
+}
 
 
-def build_scale_corpus(spark) -> None:
-    """Union-replicate the fact tables REPLICAS× with unique keys."""
-    marker = os.path.join(SCALE_DIR, "_BUILT")
-    if os.path.exists(marker):
-        return
-    os.makedirs(SCALE_DIR, exist_ok=True)
-    for t in TESTDATA_TABLES:
-        base = load_table(spark, SF_DIR, t)
-        out = os.path.join(SCALE_DIR, f"{t}.parquet")
-        if t in DIMS:
-            base.write.mode("overwrite").parquet(out)
-            continue
-        # key offset: one power-of-10 stride above the max key in the
-        # table keeps replicated keys disjoint and human-readable
-        copies = []
-        for k in range(REPLICAS):
-            c = base
-            if t == "documents":
-                if k == 0:
-                    text = F.col("text")
-                else:
-                    # salt alternate words with the copy tag: cross-copy
-                    # token Jaccard ~1/3 (no artificial near-dups) while
-                    # unsalted words keep buckets mixed across copies
-                    words = F.split(F.col("text"), " ")
-                    text = F.array_join(
-                        F.transform(
-                            words,
-                            lambda w, i: F.when(
-                                i % 2 == 0, F.concat(w, F.lit(f"x{k}"))
-                            ).otherwise(w),
-                        ),
-                        " ",
-                    )
-                c = c.select(
-                    (F.col("doc_id") + F.lit(k * 10_000_000)).alias("doc_id"),
-                    text.alias("text"),
-                    "lang",
-                    "source",
-                    F.length(text).cast("long").alias("n_chars"),
-                )
-            elif t == "embeddings":
-                emb = F.col("embedding")
-                if k > 0:
-                    # rotate by k positions: norm-preserving, cosine to
-                    # the base ~random — replicas are semantically new
-                    emb = F.concat(
-                        F.slice(emb, k + 1, F.size(emb) - k),
-                        F.slice(emb, 1, k),
-                    )
-                c = c.select(
-                    (F.col("vec_id") + F.lit(k * 10_000_000)).alias("vec_id"),
-                    emb.cast("array<float>").alias("embedding"),
-                    "label",
-                )
-            elif t == "events":
-                c = c.withColumn(
-                    "event_id", F.col("event_id") + F.lit(k * EVENT_ID_STRIDE)
-                )
-            elif t == "orders":
-                c = c.withColumn(
-                    "o_orderkey", F.col("o_orderkey") + F.lit(k * EVENT_ID_STRIDE)
-                )
-            elif t == "lineitem":
-                c = c.withColumn(
-                    "l_orderkey", F.col("l_orderkey") + F.lit(k * EVENT_ID_STRIDE)
-                )
-            copies.append(c)
-        big = copies[0]
-        for c in copies[1:]:
-            big = big.unionByName(c)
-        big.write.mode("overwrite").parquet(out)
-    open(marker, "w").write("ok")
+def _targets(env: str, default: list[str]) -> list[str]:
+    value = os.environ.get(env)
+    return default if value is None else [t for t in value.split(",") if t]
 
 
-def main() -> None:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else "BENCH_SCALE_r09.json"
-    spark = get_spark(
-        app_name="scale-bench",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+def main(out_path: str) -> None:
+    plan = PLANS.get(REPLICAS, PLANS[10])
+    targets = _targets("SPARK_GRAFT_SCALE_TARGETS", plan["targets"])
+    stream_targets = _targets("SPARK_GRAFT_SCALE_STREAM_TARGETS", plan["stream"])
+    scale_dir = measure.scale_dir(REPLICAS)
+
+    spark = measure.session("scale-bench", [measure.SF_DIR])
     t0 = time.perf_counter()
-    build_scale_corpus(spark)
+    measure.replicate(spark, measure.SF_DIR, scale_dir, REPLICAS)
     build_s = round(time.perf_counter() - t0, 1)
     if os.environ.get("SPARK_GRAFT_SCALE_BUILD_ONLY"):
-        print(json.dumps({"built": SCALE_DIR, "build_seconds": build_s}))
+        print(json.dumps({"built": scale_dir, "build_seconds": build_s}))
         return
+    measure.session("scale-bench", [scale_dir])  # warm the replicas' footers too
 
     queries = registry.all_queries()
-    # warmup (bench.py recipe)
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    for t in TESTDATA_TABLES:
-        load_table(spark, SF_DIR, t).count()
-        load_table(spark, SCALE_DIR, t).count()
+    big = f"{REPLICAS}x"
 
-    def best_of_3(fn, sf_dir: str) -> float:
-        """Best-of-3 (was 2 in r09): the r10 first pass showed single
-        long sessions throw multi-second transients (q191's 1× hit 25s
-        best-of-2 while a fresh session measured 4.5s) — a third run
-        absorbs one bad draw per (query, scale) cell."""
-        best = None
-        for _ in range(3):
-            start = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            elapsed = time.perf_counter() - start
-            best = elapsed if best is None else min(best, elapsed)
-            release_all()
-        return round(best, 3)
+    def row(name: str, runs: tuple[int, int], drain: bool = False) -> dict:
+        out = {}
+        for tag, sf_dir, n in (("1x", measure.SF_DIR, runs[0]), (big, scale_dir, runs[1])):
+            wall, ex = measure.run_best(spark, queries[name], sf_dir, n)
+            out[f"wall_{tag}"] = round(wall, 3)
+            for key in ("shuffle_write_bytes", "shuffle_read_bytes", "missing_jobs"):
+                out[f"{key}_{tag}"] = ex[key]
+            if drain:
+                peaks = SQ.LAST_STATE_METRICS.get(name.split("_")[0], [])
+                out[f"state_rows_peak_{tag}"] = max((r[1] for r in peaks), default=None)
+        out["ratio"] = round(out[f"wall_{big}"] / out["wall_1x"], 2)
+        print(json.dumps({"query": name, **out}), flush=True)
+        return out
 
-    rows = {}
-    for name in TARGETS:
-        fn = queries[name]
-        w1 = best_of_3(fn, SF_DIR)
-        w10 = best_of_3(fn, SCALE_DIR)
-        rows[name] = {
-            "wall_1x": w1,
-            "wall_10x": w10,
-            "ratio": round(w10 / w1, 2),
-        }
-        print(json.dumps({"query": name, **rows[name]}), flush=True)
-
-    from weatherapi_data_engineering_project_spark.plans import (
-        streaming_queries as SQ,
-    )
-
-    def stream_run(fn, sf_dir: str) -> tuple[float, dict]:
-        """One drain (streaming reruns share per-(query, sf) work dirs
-        that CLEAR on reuse, so best-of-2 would just re-pay the fixed
-        drain constant — one run per scale is the measurement)."""
-        start = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        elapsed = round(time.perf_counter() - start, 3)
-        release_all()
-        return elapsed, SQ.LAST_STATE_METRICS
-
-    srows = {}
-    for name in STREAM_TARGETS:
-        fn = queries[name]
-        tag = name.split("_")[0]
-        w1, m = stream_run(fn, SF_DIR)
-        peak1 = max((r[1] for r in m.get(tag, [])), default=None)
-        w10, m = stream_run(fn, SCALE_DIR)
-        peak10 = max((r[1] for r in m.get(tag, [])), default=None)
-        srows[name] = {
-            "wall_1x": w1,
-            "wall_10x": w10,
-            "ratio": round(w10 / w1, 2),
-            "state_rows_peak_1x": peak1,
-            "state_rows_peak_10x": peak10,
-        }
-        print(json.dumps({"query": name, **srows[name]}), flush=True)
+    rows = {name: row(name, plan["runs"]) for name in targets}
+    srows = {name: row(name, (1, 1), drain=True) for name in stream_targets}
 
     result = {
-        "metric": "scale_ratio_10x",
+        "metric": f"scale_ratio_{big}",
         "replicas": REPLICAS,
-        "base_sf_dir": SF_DIR,
+        "base_sf_dir": measure.SF_DIR,
         "corpus_build_seconds": build_s,
         "queries": rows,
         "streaming": srows,
     }
-    # focused re-runs (SPARK_GRAFT_SCALE_TARGETS) merge their rows into
-    # an existing artifact instead of clobbering the earlier sweep
-    if (_t_env is not None or _st_env is not None) and os.path.exists(
-        out_path
-    ):
+    # a focused row merges into an existing artifact instead of
+    # clobbering the earlier sweep
+    focused = any(
+        e in os.environ
+        for e in ("SPARK_GRAFT_SCALE_TARGETS", "SPARK_GRAFT_SCALE_STREAM_TARGETS")
+    )
+    if focused and os.path.exists(out_path):
         with open(out_path) as fh:
             prior = json.load(fh)
         prior.setdefault("queries", {}).update(rows)
@@ -288,8 +161,10 @@ def main() -> None:
         result = prior
     with open(out_path, "w") as fh:
         json.dump(result, fh, indent=1, sort_keys=True)
-    print(json.dumps({"written": out_path, "n": len(rows)}))
+    print(json.dumps({"written": out_path, "n": len(rows) + len(srows)}))
 
 
 if __name__ == "__main__":
-    main()
+    if len(sys.argv) != 2:
+        sys.exit(__doc__)
+    main(sys.argv[1])

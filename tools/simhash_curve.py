@@ -13,9 +13,9 @@ before r10). Counts are exact (COUNT over the distinct banded pairs),
 not walls — immune to box drift.
 
 Usage: python tools/simhash_curve.py [artifact.json]
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_SCALE_DIR (10x corpus, default /tmp/spark_graft_scale10x),
-     SPARK_GRAFT_SCALE100_DIR (100x corpus, default /tmp/spark_graft_scale100x).
+Env: SPARK_GRAFT_SF_DIR (1x corpus, default /root/testdata/sf0.1). The
+10x and 100x corpora are measure.scale_dir(10) and scale_dir(100), as
+tools/scale_bench.py builds them.
 """
 
 from __future__ import annotations
@@ -24,21 +24,19 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from weatherapi_data_engineering_project_spark.session import get_spark  # noqa: E402
+import measure  # noqa: E402
 from weatherapi_data_engineering_project_spark.schemas import load_table  # noqa: E402
 from weatherapi_data_engineering_project_spark.operators import dedup as DD  # noqa: E402
 from weatherapi_data_engineering_project_spark.caching import release_all  # noqa: E402
 
 SCALES = [
-    ("1x", os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")),
-    ("10x", os.environ.get("SPARK_GRAFT_SCALE_DIR", "/tmp/spark_graft_scale10x")),
-    ("100x", os.environ.get(
-        "SPARK_GRAFT_SCALE100_DIR", "/tmp/spark_graft_scale100x"
-    )),
+    ("1x", measure.SF_DIR),
+    ("10x", measure.scale_dir(10)),
+    ("100x", measure.scale_dir(100)),
 ]
 
 
@@ -87,11 +85,7 @@ _PAIR_COUNT_CAP = 200_000_000
 
 def main() -> None:
     artifact = sys.argv[1] if len(sys.argv) > 1 else "BENCH_SCALE_r11.json"
-    spark = get_spark(
-        app_name="simhash-curve",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = measure.session("simhash-curve", [measure.SF_DIR])
 
     rows = {}
     for tag, sf_dir in SCALES:

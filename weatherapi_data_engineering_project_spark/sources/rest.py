@@ -47,11 +47,6 @@ FETCH_RESULT_SCHEMA = T.StructType(
 
 _ARROW_SCHEMA = pa.schema([(name, pa.string()) for name in FETCH_RESULT_SCHEMA.names])
 
-DEFAULT_CITIES = [
-    "New Delhi", "Bangalore", "Chennai", "Pune", "Mumbai",
-    "Hyderabad", "Jaipur", "Kochi", "Kolkata", "Ahmedabad",
-]  # DataExtraction.py:48
-
 
 def http_fetcher(api_key: str, days: int = 3) -> Callable[[str], str | None]:
     """Production fetcher (requires ``requests`` at call time).
